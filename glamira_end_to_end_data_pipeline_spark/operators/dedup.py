@@ -71,9 +71,11 @@ def exploded_shingles(
     the 31-bit shingle hash — the normalized form every near-dup
     operator consumes. ``distinct=False`` skips the set-semantics
     shuffle for consumers whose aggregation is duplicate-insensitive
-    (MIN-based MinHash signatures): per-doc distinct equals global
+    (MIN-based MinHash signatures, ``collect_set`` shingle sets, a probe
+    before a per-doc distinct count): per-doc distinct equals global
     (doc, shingle) distinct, so set semantics can always be recovered
-    later on a restricted subset instead of the full stream.
+    after the aggregation or on a restricted subset instead of the full
+    stream.
 
     Hashing happens BEFORE the distinct ("shuffle digests, never text"):
     the dedup shuffle and every downstream join move 8-byte longs, not
@@ -142,6 +144,13 @@ def shingle_to_int(shingle: F.Column | str) -> F.Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long") % MINHASH_P
 
 
+def _minhash_aggs(num_hashes: int) -> list[F.Column]:
+    return [
+        F.min((F.lit(a) * F.col("shingle_x") + F.lit(b)) % MINHASH_P).alias(f"s{i}")
+        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+    ]
+
+
 def minhash_signatures(
     shingles: DataFrame, id_col: str = "doc_id", num_hashes: int = 16
 ) -> DataFrame:
@@ -153,11 +162,46 @@ def minhash_signatures(
     and still byte-identical across engines: products stay < 2^62, so
     64-bit integer math is exact in both Spark and the SQL oracle.
     """
-    aggs = [
-        F.min((F.lit(a) * F.col("shingle_x") + F.lit(b)) % MINHASH_P).alias(f"s{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
+    return shingles.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
+
+
+def minhash_signed_sets(
+    shingles: DataFrame, id_col: str = "doc_id", num_hashes: int = 16
+) -> DataFrame:
+    """:func:`minhash_signatures` plus ``shingle_set`` — the document's
+    distinct shingle hashes — computed in the SAME aggregation. Both are
+    duplicate-insensitive (MIN and ``collect_set``), so they consume the
+    raw, non-distinct shingle stream through map-side partial
+    aggregation: one exchange yields everything LSH banding and exact
+    set-Jaccard verification need, with no (doc, shingle) distinct."""
+    return shingles.groupBy(id_col).agg(
+        *_minhash_aggs(num_hashes),
+        F.collect_set("shingle_x").alias("shingle_set"),
+    )
+
+
+def set_jaccard(
+    pairs: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    a: str = "a",
+    b: str = "b",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(a, b, jaccard) for candidate pairs from per-document shingle
+    sets (``minhash_signed_sets``): |A∩B| = size(array_intersect), the
+    same ``round(|A∩B| / (|A|+|B|-|A∩B|), 6)`` that
+    :func:`jaccard_for_pairs` computes from the exploded-shingle join,
+    as two row lookups per pair with no shingle-level join."""
+    sa = sets_a.select(F.col(id_col).alias(a), F.col("shingle_set").alias("__sa"))
+    sb = sets_b.select(F.col(id_col).alias(b), F.col("shingle_set").alias("__sb"))
+    n_inter = F.size(F.array_intersect("__sa", "__sb"))
+    n_union = F.size("__sa") + F.size("__sb") - n_inter
+    return (
+        pairs.join(sa, a)
+        .join(sb, b)
+        .select(a, b, F.round(n_inter / n_union, 6).alias("jaccard"))
+    )
 
 
 def lsh_bands(
@@ -274,45 +318,30 @@ def minhash_near_dups(
     ``max_bucket_size`` forwards to :func:`lsh_candidate_pairs` (the
     hot-bucket guard for boilerplate-heavy corpora).
 
-    Shuffle budget: the raw (non-distinct) shingle stream NEVER
-    shuffles at full width. MinHash signatures are MIN aggregates —
-    duplicate-insensitive — so they consume the raw stream through
-    partial aggregation (map-side collapse to one row per doc before
-    the exchange); the set semantics exact-Jaccard needs are recovered
-    AFTER candidate generation, on the shingles of candidate docs only
-    (LSH's whole point is that candidates ≪ corpus — AQE turns the
-    restriction join into a broadcast when the candidate id list is
-    small, which is the designed regime). The previous full-corpus
-    (doc, shingle) DISTINCT was the pipeline's widest shuffle."""
-    # Raw shingle stream feeds signatures + the candidate-restricted
-    # verify set; persist so explode+md5 runs once.
-    sh_raw = tracked_persist(
-        exploded_shingles(df, id_col, text_col, distinct=False),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    # signatures feed both sides of the band self-join — persist or the
-    # 16-way min aggregation runs twice.
+    Shuffle budget: one aggregation over the raw (non-distinct)
+    shingle stream (:func:`minhash_signed_sets`) yields each document's
+    signature AND distinct shingle set; it is the only persisted frame.
+    The stream never shuffles at full width (MIN and ``collect_set``
+    collapse map-side to one row per doc before the exchange), and no
+    (doc, shingle) distinct runs anywhere. The band self-join reads
+    that table once per side; verification looks up both sets of each
+    candidate pair in the same table and intersects them
+    (:func:`set_jaccard`) — two row lookups per pair, no shingle-level
+    join."""
     sig = tracked_persist(
-        minhash_signatures(sh_raw, id_col, num_hashes), StorageLevel.MEMORY_AND_DISK
-    )
-    cand = tracked_persist(
-        lsh_candidate_pairs(
-            lsh_bands(sig, id_col, num_hashes, bands),
+        minhash_signed_sets(
+            exploded_shingles(df, id_col, text_col, distinct=False),
             id_col,
-            max_bucket_size=max_bucket_size,
+            num_hashes,
         ),
         StorageLevel.MEMORY_AND_DISK,
     )
-    cand_ids = (
-        cand.select(F.col("a").alias(id_col))
-        .unionAll(cand.select(F.col("b").alias(id_col)))
-        .distinct()
+    cand = lsh_candidate_pairs(
+        lsh_bands(sig, id_col, num_hashes, bands),
+        id_col,
+        max_bucket_size=max_bucket_size,
     )
-    # Set semantics restored on candidate docs only (tiny distinct).
-    sh_set = tracked_persist(
-        sh_raw.join(cand_ids, id_col).distinct(), StorageLevel.MEMORY_AND_DISK
-    )
-    return jaccard_for_pairs(cand, sh_set, id_col).filter(
+    return set_jaccard(cand, sig, sig, id_col=id_col).filter(
         F.col("jaccard") >= threshold
     )
 
@@ -337,64 +366,35 @@ def minhash_cross_batch(
     only its (id, band) rows — in production those signatures/bands
     are persisted once at corpus-admission time (they are plain
     columns), so each round's cost scales with the BATCH, not the
-    corpus. Exact-Jaccard verification restores set semantics on
-    candidate docs only (the :func:`minhash_near_dups` discipline).
+    corpus. Each side is one :func:`minhash_signed_sets` aggregation
+    (signature and distinct shingle set together, the
+    :func:`minhash_near_dups` shape); verification intersects the two
+    sets of each candidate pair (:func:`set_jaccard`).
 
     Returns ``(new_id, corpus_id, jaccard)`` for matches ≥ threshold —
     new docs absent from the result are genuinely new content."""
-    sh_c = tracked_persist(
-        exploded_shingles(corpus, id_col, text_col, distinct=False),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    sh_n = tracked_persist(
-        exploded_shingles(new_batch, id_col, text_col, distinct=False),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    b_c = lsh_bands(
-        minhash_signatures(sh_c, id_col, num_hashes), id_col, num_hashes, bands
-    ).select(F.col(id_col).alias("corpus_id"), "band_id", "band_hash")
-    b_n = lsh_bands(
-        minhash_signatures(sh_n, id_col, num_hashes), id_col, num_hashes, bands
-    ).select(F.col(id_col).alias("new_id"), "band_id", "band_hash")
-    cand = tracked_persist(
-        b_c.join(b_n, ["band_id", "band_hash"])
-        .select("new_id", "corpus_id")
-        .distinct(),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    # per-side set semantics, candidate docs only
-    set_c = (
-        sh_c.join(
-            cand.select(F.col("corpus_id").alias(id_col)).distinct(), id_col
+
+    def signed(df: DataFrame) -> DataFrame:
+        # feeds the band join and the verification lookup
+        return tracked_persist(
+            minhash_signed_sets(
+                exploded_shingles(df, id_col, text_col, distinct=False),
+                id_col,
+                num_hashes,
+            ),
+            StorageLevel.MEMORY_AND_DISK,
         )
-        .distinct()
-        .select(F.col(id_col).alias("corpus_id"), "shingle_x")
+
+    sig_c, sig_n = signed(corpus), signed(new_batch)
+    b_c = lsh_bands(sig_c, id_col, num_hashes, bands).select(
+        F.col(id_col).alias("corpus_id"), "band_id", "band_hash"
     )
-    set_n = (
-        sh_n.join(cand.select(F.col("new_id").alias(id_col)).distinct(), id_col)
-        .distinct()
-        .select(F.col(id_col).alias("new_id"), "shingle_x")
+    b_n = lsh_bands(sig_n, id_col, num_hashes, bands).select(
+        F.col(id_col).alias("new_id"), "band_id", "band_hash"
     )
-    sz_c = set_c.groupBy("corpus_id").agg(F.count("*").alias("nc"))
-    sz_n = set_n.groupBy("new_id").agg(F.count("*").alias("nn"))
-    inter = (
-        cand.join(set_n, "new_id")
-        .join(set_c, ["corpus_id", "shingle_x"])
-        .groupBy("new_id", "corpus_id")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    return (
-        inter.join(sz_n, "new_id")
-        .join(sz_c, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(
-                F.col("n_inter") / (F.col("nn") + F.col("nc") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    cand = b_c.join(b_n, ["band_id", "band_hash"]).select("new_id", "corpus_id").distinct()
+    return set_jaccard(cand, sig_n, sig_c, "new_id", "corpus_id", id_col).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -780,8 +780,12 @@ def duplicate_clusters(
             )
 
             out = _local_cc([(r["u"], r["v"]) for r in probe_rows])
-            return pairs.sparkSession.createDataFrame(
-                out, "doc_id long, cluster_id long"
+            # bounded by local_threshold edges; a local relation carries
+            # no size statistics, so without the hint every join against
+            # the labels (retain_canonical's anti-join) plans as a
+            # sort-merge join that shuffles the corpus side on doc_id.
+            return F.broadcast(
+                pairs.sparkSession.createDataFrame(out, "doc_id long, cluster_id long")
             )
     edges = tracked_persist(
         e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),

@@ -363,29 +363,26 @@ def decontaminate(
     least one word ``n``-gram with the benchmark/eval set (the standard
     pretraining hygiene step — leaked eval text inflates scores).
 
-    Shape: explode DISTINCT n-gram hashes on both sides (never the
-    text — dedup.exploded_shingles hashes before its distinct, so only
-    longs shuffle), inner-join on the hash, count shared grams per doc,
-    left-join the verdict back. At 100 TB the benchmark side is tiny —
-    its gram set broadcasts — so the scan-heavy side is map-only +
-    one broadcast probe; corpus docs with zero hits never shuffle."""
+    Shape: probe first, distinct after. The corpus side explodes its
+    n-gram hashes WITHOUT a distinct (never the text — only longs) and
+    probes the broadcast benchmark gram set map-side; only matched rows
+    reach the one shuffle, a per-doc distinct count (so a gram a doc
+    repeats counts once) taken as the size of a ``collect_set`` — one
+    exchange on the doc id, where ``countDistinct`` plans two. The
+    verdict left-joins back. At 100 TB the
+    benchmark side is tiny, so the scan-heavy side is map-only + one
+    broadcast probe; corpus docs with zero hits never shuffle."""
     from glamira_end_to_end_data_pipeline_spark.operators.dedup import (
         exploded_shingles,
     )
 
-    def grams(df: DataFrame, out: str) -> DataFrame:
-        return exploded_shingles(df, id_col, text_col, n).withColumnRenamed(
-            id_col, out
-        )
-
+    bench_grams = exploded_shingles(benchmark, id_col, text_col, n, distinct=False)
     hits = (
-        grams(corpus, "c_id")
-        .join(
-            F.broadcast(grams(benchmark, "b_id").select("shingle_x").distinct()),
-            "shingle_x",
-        )
+        exploded_shingles(corpus, id_col, text_col, n, distinct=False)
+        .withColumnRenamed(id_col, "c_id")
+        .join(F.broadcast(bench_grams.select("shingle_x").distinct()), "shingle_x")
         .groupBy("c_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_grams"))
+        .agg(F.size(F.collect_set("shingle_x")).cast("long").alias("n_shared_grams"))
     )
     return (
         corpus.select(F.col(id_col))

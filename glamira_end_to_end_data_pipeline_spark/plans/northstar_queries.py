@@ -423,15 +423,18 @@ def text_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side materialization between stages — one lazy plan,
     Catalyst sees everything.
 
-    r8 stage profile (sf0.1, per-stage counts on the persisted
-    corpus): MinHash candidate generation ~57% of wall, quality
-    scoring ~17%, corpus build ~20%, retain + decontaminate <5%
-    combined. Decontamination re-shingles at n=8 (MinHash shingles
-    are n=3 — different streams, nothing shareable) but costs ~0.2 s
-    against the persisted corpus, so the capstone's cost is the
-    intrinsic MinHash stage — the same cost visible standalone in
-    ``dedup_minhash_lsh``. Accepted; no cross-stage sharing exists to
-    exploit."""
+    Job profile (500 generated docs plus their injected duplicates,
+    local[4]): a warm pass issues 22 Spark jobs. The corpus never
+    shuffles on doc_id — the local connected-components labels
+    broadcast, so every reference to ``kept`` streams it. 12 jobs run
+    while the plan is built (the CC limit-probe collect executes the
+    whole MinHash subplan: signature/set aggregation, band self-join,
+    verification) and 10 in the final action (decontamination's gram
+    shuffles, the quality/split scan and the per-split summary).
+    Executor task CPU is about 1 s of a pass; the rest is per-job
+    driver latency, so the job count is where the remaining cost sits.
+    Decontamination re-shingles at n=8 (MinHash shingles are n=3 —
+    different streams, nothing shareable)."""
     from glamira_end_to_end_data_pipeline_spark.caching import tracked_persist
 
     docs = _docs(spark, sf_dir)

@@ -4,8 +4,10 @@ Usage: python scripts/time_entry.py <name> [<name> ...] [--runs N]
 
 Times each named registry entry exactly like bench.py does (plan →
 noop sink on the warm session), printing every run plus the min —
-the steady-state number the bench would record. Keeps the bench
-contract untouched; this is a measurement-only tool.
+the steady-state number the bench would record — and the Spark jobs
+and stages each run issued (from the JVM status store), so a job-count
+regression shows without a benchmark run. Keeps the bench contract
+untouched; this is a measurement-only tool.
 """
 
 from __future__ import annotations
@@ -18,6 +20,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import queries  # noqa: E402
 from glamira_end_to_end_data_pipeline_spark import get_spark  # noqa: E402
+
+
+def jobs_and_stages(spark, group: str) -> tuple[int, int]:
+    """(jobs, stages run) for one job group; stages a job skipped
+    (shuffle output reused) are not counted."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store, tracker = jsc.statusStore(), sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    infos = [tracker.getJobInfo(jid) for jid in jobs]
+    stages = {
+        sid
+        for info in infos
+        if info is not None
+        for sid in info.stageIds
+        if store.lastStageAttempt(sid).status().toString() != "SKIPPED"
+    }
+    return len(jobs), len(stages)
 
 
 def main() -> None:
@@ -56,13 +77,15 @@ def main() -> None:
     )
 
     for name in args:
-        ts = []
-        for _ in range(runs):
-            spark.sparkContext.setJobDescription(name)
+        ts, js = [], []
+        for i in range(runs):
+            group = f"{name}#{i}"
+            spark.sparkContext.setJobGroup(group, name)
             t0 = time.time()
             consume(qs[name](spark, sf_dir))
             ts.append(round(time.time() - t0, 3))
-        print(f"{name}: runs={ts} min={min(ts)}")
+            js.append("{}/{}".format(*jobs_and_stages(spark, group)))
+        print(f"{name}: runs={ts} min={min(ts)} jobs/stages={js}")
 
 
 if __name__ == "__main__":

@@ -205,15 +205,69 @@ def test_shuffle_shards_is_single_exchange_permutation(spark):
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_shard.values())
 
 
+def _streamed_side(plan: str, node: str) -> str:
+    """Tree lines of the streamed (left) child of the first ``node``
+    line in a formatted plan whose build side is on the right."""
+    lines = plan.split("\n\n")[0].splitlines()
+    i = next(k for k, line in enumerate(lines) if node in line)
+    col = lines[i].index(node)
+    out = []
+    for line in lines[i + 1 :]:
+        if line[col : col + 2] == "+-":
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
 def test_decontaminate_benchmark_side_broadcasts(spark):
-    """The benchmark gram set must broadcast (clean corpus docs never
-    shuffle for the probe)."""
+    """The benchmark gram set must broadcast, and the corpus gram stream
+    must reach the probe without an Exchange (probe first, distinct
+    after): clean corpus docs never shuffle."""
     from __spark_entry__ import queries
     from tests.test_plans import plan_of
     from tests.conftest import SF_SMALL
 
     plan = plan_of(queries()["text_decontaminate"](spark, SF_SMALL))
     assert "BroadcastHashJoin" in plan, plan
+    probe = _streamed_side(plan, "BroadcastHashJoin Inner BuildRight")
+    assert "Generate" in probe, plan  # the corpus gram explode
+    assert "Exchange" not in probe, plan
+
+
+def test_decontaminate_counts_distinct_shared_grams(spark):
+    """A benchmark 8-gram repeated inside one corpus doc counts once;
+    a doc sharing no 8-gram is 0 / not contaminated."""
+    from glamira_end_to_end_data_pipeline_spark.operators.text import decontaminate
+
+    gram = "alpha beta gamma delta epsilon zeta eta theta"
+    benchmark = spark.createDataFrame(
+        [(1, f"{gram} and then some benchmark tail words")], ["doc_id", "text"]
+    )
+    corpus = spark.createDataFrame(
+        [
+            (10, f"{gram} x {gram} y {gram}"),  # one gram, three times
+            (11, "completely unrelated corpus text with no overlap at all"),
+            (12, "alpha beta"),  # fewer than 8 tokens
+        ],
+        ["doc_id", "text"],
+    )
+    got = {
+        r["doc_id"]: (r["n_shared_grams"], r["contaminated"])
+        for r in decontaminate(corpus, benchmark, n=8).collect()
+    }
+    assert got == {10: (1, True), 11: (0, False), 12: (0, False)}
+
+
+def test_pretraining_pipeline_corpus_never_shuffles_on_doc_id(spark):
+    """The local connected-components labels broadcast, so the retain
+    anti-join (and every later reference to the kept corpus) streams
+    the corpus without an Exchange on doc_id."""
+    from __spark_entry__ import queries
+    from tests.test_plans import plan_of
+    from tests.conftest import SF_SMALL
+
+    plan = plan_of(queries()["text_pretraining_pipeline"](spark, SF_SMALL))
+    assert "hashpartitioning(doc_id" not in plan, plan
 
 
 def test_zorder_write_clusters_both_dimensions(spark, tmp_path):
@@ -519,6 +573,71 @@ def test_hamming_bucket_cap_drops_hot_slice(spark):
         df, id_col="id", hash_col="fp", max_hamming=3, chunks=4
     )
     assert uncapped.count() == 30 * 29 // 2 + 1
+
+
+def _near_dup_corpus(seed: int = 11) -> list[tuple[int, str]]:
+    """Seeded corpus covering every MinHash edge case: docs that repeat
+    shingles, docs under 3 tokens, exact and near duplicates, and a
+    boilerplate hub shared by many docs."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(40)]
+    rows: list[tuple[int, str]] = []
+    for i in range(40):
+        rows.append((i, " ".join(rng.choice(vocab) for _ in range(rng.randint(6, 30)))))
+    for i in range(40, 50):  # exact duplicates
+        rows.append((i, rows[i - 40][1]))
+    for i in range(50, 70):  # near duplicates: one or two tokens changed
+        toks = rows[i - 50][1].split()
+        for _ in range(rng.randint(1, 2)):
+            toks[rng.randrange(len(toks))] = rng.choice(vocab)
+        rows.append((i, " ".join(toks)))
+    for i in range(70, 80):  # repeated shingles; the partner repeats
+        # the phrase more often: same shingle set, larger multiset
+        phrase = " ".join(rng.choice(vocab) for _ in range(3))
+        k = rng.randint(2, 4)
+        rows.append((i, " ".join([phrase] * k)))
+        rows.append((i + 15, " ".join([phrase] * (k + 2))))
+    rows += [(80, ""), (81, "w1"), (82, "w1 w2"), (83, "w1 w2"), (84, "W1  w2 ")]
+    hub = "terms of service apply to all users of this site always"
+    rows += [(i, hub) for i in range(100, 120)]
+    rows += [(120 + i, f"{hub} w{i}") for i in range(5)]
+    return rows
+
+
+def test_minhash_near_dups_matches_exploded_join_definition(spark):
+    """Two-path equality: the one-aggregation operator (signatures and
+    collect_set shingle sets together, verified by array_intersect)
+    equals the exploded-join definition — signatures over the raw
+    stream, banded candidates, jaccard_for_pairs over the DISTINCT
+    (doc, shingle) stream — with and without the hot-bucket cap."""
+    from glamira_end_to_end_data_pipeline_spark.operators.dedup import (
+        exploded_shingles,
+        jaccard_for_pairs,
+        lsh_bands,
+        lsh_candidate_pairs,
+        minhash_near_dups,
+        minhash_signatures,
+    )
+
+    df = spark.createDataFrame(_near_dup_corpus(), "doc_id long, text string")
+    for threshold, cap in ((0.5, None), (0.3, 8), (0.0, None)):
+        cand = lsh_candidate_pairs(
+            lsh_bands(minhash_signatures(exploded_shingles(df, distinct=False))),
+            max_bucket_size=cap,
+        )
+        ref = jaccard_for_pairs(cand, exploded_shingles(df, distinct=True)).filter(
+            F.col("jaccard") >= threshold
+        )
+        got = minhash_near_dups(df, threshold=threshold, max_bucket_size=cap)
+        assert got.columns == ref.columns == ["a", "b", "jaccard"]
+        want = sorted(tuple(r) for r in ref.collect())
+        assert sorted(tuple(r) for r in got.collect()) == want, (threshold, cap)
+        assert any(j == 1.0 for _a, _b, j in want)  # exact dups surface
+        assert any(j < 1.0 for _a, _b, j in want)  # and near dups
+        hub_pairs = [p for p in want if 100 <= p[0] < 120 and 100 <= p[1] < 120]
+        assert (len(hub_pairs) == 0) == (cap is not None)
 
 
 def test_lsh_bucket_cap_bounds_candidates(spark):
