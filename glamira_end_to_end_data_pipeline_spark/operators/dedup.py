@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from glamira_end_to_end_data_pipeline_spark.caching import tracked_persist
+from glamira_end_to_end_data_pipeline_spark.frames import local_frame
 
 
 def normalized_tokens(text_col: str = "text") -> F.Column:
@@ -780,12 +781,16 @@ def duplicate_clusters(
             )
 
             out = _local_cc([(r["u"], r["v"]) for r in probe_rows])
-            # bounded by local_threshold edges; a local relation carries
-            # no size statistics, so without the hint every join against
-            # the labels (retain_canonical's anti-join) plans as a
-            # sort-merge join that shuffles the corpus side on doc_id.
+            # The labels are a LocalRelation (local_frame), not a pickled
+            # LogicalRDD: text_pretraining_pipeline's plan scans them three
+            # times, and each scan of an RDD built from a Python list ran
+            # through PySpark workers. The relation has size statistics and broadcasts
+            # without a Spark job. The hint (bounded by local_threshold
+            # edges) keeps every join against the labels, such as
+            # retain_canonical's anti-join, from shuffling the corpus on
+            # doc_id even where a session turns auto-broadcast off.
             return F.broadcast(
-                pairs.sparkSession.createDataFrame(out, "doc_id long, cluster_id long")
+                local_frame(pairs.sparkSession, out, "doc_id long, cluster_id long")
             )
     edges = tracked_persist(
         e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),

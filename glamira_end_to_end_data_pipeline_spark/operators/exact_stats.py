@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from glamira_end_to_end_data_pipeline_spark.frames import local_frame
+
 
 def weighted_quantiles_two_phase(
     df: DataFrame,
@@ -69,7 +71,7 @@ def weighted_quantiles_two_phase(
     )
     tot = bw.groupBy("g").agg(F.sum("bw").alias("w"))
     spark = df.sparkSession
-    qdf = spark.createDataFrame(list(specs), "q string, qn long, qd long")
+    qdf = local_frame(spark, list(specs), "q string, qn long, qd long")
     targets = (
         cum.join(tot, "g")
         .crossJoin(F.broadcast(qdf))

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from glamira_end_to_end_data_pipeline_spark.caching import tracked_persist
+from glamira_end_to_end_data_pipeline_spark.frames import local_frame
 
 
 def pagerank(
@@ -926,8 +927,8 @@ def kcore_exact(
         # (unique, order-independent) fixed point.
         survivors = _local_kcore([(r.u, r.v) for r in und.collect()], k)
         und.unpersist()
-        return edges.sparkSession.createDataFrame(
-            survivors, "node long, degree long"
+        return local_frame(
+            edges.sparkSession, survivors, "node long, degree long"
         )
     # Adaptive doubling: peeling is monotone (edges only leave), so an
     # unchanged edge count over a BATCH of peel rounds proves the fixed
@@ -999,8 +1000,8 @@ def lpa_exact(
         )
         e.unpersist()
         und.unpersist()
-        return edges.sparkSession.createDataFrame(
-            labs, "node long, community long"
+        return local_frame(
+            edges.sparkSession, labs, "node long, community long"
         )
     labels = (
         und.select(F.col("u").alias("node"))
@@ -1136,7 +1137,7 @@ def scc_exact(
             {"initial_edges": n_edges, "bsp_rounds": 0, "local_finish": False}
         )
     if n_edges == 0:
-        return spark.createDataFrame([], "node long, scc_id long")
+        return local_frame(spark, [], "node long, scc_id long")
     if n_edges <= local_threshold:
         # hybrid fast path (see _LOCAL_THRESHOLD / Hong et al. 2013):
         # the whole graph is driver-bounded — Tarjan lands on the same
@@ -1144,8 +1145,8 @@ def scc_exact(
         comp = _tarjan_scc([(r.u, r.v) for r in e_all.collect()])
         if stats is not None:
             stats["local_finish"] = True
-        return spark.createDataFrame(
-            sorted(comp.items()), "node long, scc_id long"
+        return local_frame(
+            spark, sorted(comp.items()), "node long, scc_id long"
         )
     remaining = (
         e_all.select(F.col("u").alias("node"))
@@ -1175,8 +1176,8 @@ def scc_exact(
                 for r in remaining.collect():
                     comp.setdefault(r.node, r.node)
                 assigned_parts.append(
-                    spark.createDataFrame(
-                        sorted(comp.items()), "node long, scc_id long"
+                    local_frame(
+                        spark, sorted(comp.items()), "node long, scc_id long"
                     )
                 )
                 if stats is not None:
@@ -1312,7 +1313,7 @@ def scc_exact(
                 "outer rounds — raise max_rounds (result would be partial)"
             )
     if not assigned_parts:
-        return spark.createDataFrame([], "node long, scc_id long")
+        return local_frame(spark, [], "node long, scc_id long")
     out = assigned_parts[0]
     for part in assigned_parts[1:]:
         out = out.unionAll(part)
@@ -1355,9 +1356,9 @@ def bfs_distances(
         # hybrid fast path (see _LOCAL_THRESHOLD): min hop distances
         # are a unique fixed point — sequential BFS is identical.
         out = _local_bfs([(r.u, r.v) for r in e.collect()], sources)
-        return spark.createDataFrame(out, "node long, dist long")
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in sources], "node long, dist long"
+        return local_frame(spark, out, "node long, dist long")
+    dist = local_frame(
+        spark, [(int(s), 0) for s in sources], "node long, dist long"
     ).localCheckpoint()
 
     def _step(d: DataFrame) -> DataFrame:
@@ -1506,9 +1507,9 @@ def bfs_distances_per_source(
             out.extend(
                 (int(s), int(n), int(d)) for n, d in _local_bfs(rows, [s])
             )
-        return spark.createDataFrame(out, "src long, node long, dist long")
-    dist = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in sources], "src long, node long, dist long"
+        return local_frame(spark, out, "src long, node long, dist long")
+    dist = local_frame(
+        spark, [(int(s), int(s), 0) for s in sources], "src long, node long, dist long"
     ).localCheckpoint()
 
     def _step(d: DataFrame) -> DataFrame:
@@ -1568,8 +1569,8 @@ def bfs_path_counts(
         .localCheckpoint()
     )
     spark = edges.sparkSession
-    settled = spark.createDataFrame(
-        [(int(source), 0, 1)], "node long, dist long, npaths long"
+    settled = local_frame(
+        spark, [(int(source), 0, 1)], "node long, dist long, npaths long"
     ).localCheckpoint()
     frontier = settled
     for d in range(1, max_rounds + 1):
@@ -1709,7 +1710,8 @@ def betweenness_batched(
         .distinct()
         .localCheckpoint()
     )
-    settled = spark.createDataFrame(
+    settled = local_frame(
+        spark,
         [(int(s), int(s), 0, 1) for s in sources],
         "src long, node long, dist long, npaths long",
     ).localCheckpoint()
@@ -1865,8 +1867,8 @@ def pointer_jump_roots(
                 check_dangling,
             )
             return (
-                spark.createDataFrame(
-                    out, "node long, root long, depth long"
+                local_frame(
+                    spark, out, "node long, root long, depth long"
                 ),
                 rounds,
             )
@@ -1978,7 +1980,7 @@ def boruvka_mst(
         .select("node", F.col("node").alias("label"))
         .localCheckpoint()
     )
-    mst = spark.createDataFrame([], "u long, v long, w long")
+    mst = local_frame(spark, [], "u long, v long, w long")
     rounds = 0
     for _ in range(max_rounds):
         el = (

@@ -23,7 +23,11 @@ At 100 TB: store embeddings bucket-partitioned (the bucket expression
 below is a deterministic function of the vector, so it's a free
 partition column at write time); a top-k probe then touches one
 partition per query bucket — classic IVF with Parquet partition pruning
-standing in for the inverted index.
+standing in for the inverted index. Within a session the IVF cells own
+their inverted lists (:class:`IvfCells`): the corpus-to-cell assignment
+is persisted on the first lookup and released with the cells, so a
+lookup costs a scan of the probed lists, never a re-assignment of the
+corpus.
 """
 
 from __future__ import annotations
@@ -329,14 +333,63 @@ def quantize_int8(
     )
 
 
+class IvfCells(list):
+    """A frozen IVF quantizer that owns its inverted lists.
+
+    As a list it is exactly what :func:`ivf_centroids` always returned —
+    ``(cell_id, vector, norm)`` triples — so every function that takes a
+    centroid list takes it unchanged. It also remembers the corpus frame
+    and columns it was built from. For that corpus,
+    :meth:`inverted_lists` is the corpus projected to ``(neighbor_id,
+    c_vec, c_norm, cell)``, persisted on first use, so repeated
+    :func:`ivf_topk` lookups against one index assign the corpus to
+    cells once instead of once per lookup. :meth:`release` unpersists
+    the lists; the registry's ``release_tracked`` does not, because an
+    index outlives the registry entries that query it."""
+
+    def __init__(
+        self,
+        triples: list[tuple[int, list[float], float]],
+        corpus: DataFrame,
+        id_col: str,
+        vec_col: str,
+    ):
+        super().__init__(triples)
+        self._source = (corpus, id_col, vec_col)
+        self._lists: DataFrame | None = None
+
+    def inverted_lists(
+        self, corpus: DataFrame, id_col: str, vec_col: str
+    ) -> DataFrame | None:
+        """The persisted assignment of ``corpus``, or None unless
+        ``corpus`` is the very frame (and columns) the cells were built
+        from — another frame may hold other rows."""
+        src, src_id, src_vec = self._source
+        if corpus is not src or (id_col, vec_col) != (src_id, src_vec):
+            return None
+        if self._lists is None:
+            self._lists = _assign_cells(corpus, self, id_col, vec_col).persist()
+        return self._lists
+
+    def release(self) -> None:
+        """Unpersist the inverted lists (idempotent); a later lookup
+        builds them again."""
+        if self._lists is not None:
+            self._lists.unpersist()
+            self._lists = None
+
+
 def ivf_centroids(
     corpus: DataFrame,
     n_cells: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> list[tuple[int, list[float], float]]:
+) -> IvfCells:
     """Coarse quantizer for IVF: a small, frozen centroid set collected
-    to the driver — (cell_id, vector, norm) triples.
+    to the driver — (cell_id, vector, norm) triples, as an
+    :class:`IvfCells` that also owns the corpus's inverted lists:
+    persisted by the first :func:`ivf_topk` lookup against this
+    ``corpus`` and released with the cells (:meth:`IvfCells.release`).
 
     Seeding is deterministic (the ``n_cells`` lowest-id corpus vectors)
     so the cross-engine oracle can reproduce the cell structure exactly;
@@ -358,7 +411,12 @@ def ivf_centroids(
         )
         .collect()
     )
-    return [(r["cid"], list(r["cvec"]), r["cnorm"]) for r in rows]
+    return IvfCells(
+        [(r["cid"], list(r["cvec"]), r["cnorm"]) for r in rows],
+        corpus,
+        id_col,
+        vec_col,
+    )
 
 
 def lloyd_refine(
@@ -600,6 +658,19 @@ def ivf_probe_cells(
     return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"])
 
 
+def _assign_cells(
+    corpus: DataFrame,
+    cents: list[tuple[int, list[float], float]],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The corpus side of an IVF probe: (neighbor_id, c_vec, c_norm,
+    cell), cell assigned map-side by :func:`ivf_cell_bulk`."""
+    return _side(corpus, id_col, vec_col, "neighbor_id", "c_vec", "c_norm").withColumn(
+        "cell", ivf_cell_bulk(F.col("c_vec"), F.col("c_norm"), cents)
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -625,14 +696,24 @@ def ivf_topk(
     ``cents`` swaps in a different quantizer (e.g.
     :func:`kcenter_centroids`) — assignment/probe are quantizer-
     agnostic; default is the lowest-id seeds of :func:`ivf_centroids`.
+
+    Passing the :class:`IvfCells` that :func:`ivf_centroids` built from
+    this same ``corpus`` frame (and columns) reuses their inverted
+    lists: the first such call persists the assigned corpus, every
+    later one scans it, and no lookup re-runs the assignment kernel.
+    Any other ``cents`` (a plain list, cells of another corpus frame,
+    or ``refine_iters`` > 0, whose refined centroids differ) and
+    ``cents=None`` put the assignment into the lookup's own plan.
     """
+    c = None
+    if isinstance(cents, IvfCells) and not refine_iters:
+        c = cents.inverted_lists(corpus, id_col, vec_col)
     if cents is None:
         cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
     if refine_iters:
         cents = lloyd_refine(corpus, cents, refine_iters, vec_col)
-    c = _side(corpus, id_col, vec_col, "neighbor_id", "c_vec", "c_norm").withColumn(
-        "cell", ivf_cell_bulk(F.col("c_vec"), F.col("c_norm"), cents)
-    )
+    if c is None:
+        c = _assign_cells(corpus, cents, id_col, vec_col)
     q = _side(queries, id_col, vec_col, "query_id", "q_vec", "q_norm").withColumn(
         "cell",
         F.explode(ivf_probe_cells(F.col("q_vec"), F.col("q_norm"), cents, nprobe)),

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from glamira_end_to_end_data_pipeline_spark.caching import tracked_persist
+from glamira_end_to_end_data_pipeline_spark.frames import local_frame
 
 from glamira_end_to_end_data_pipeline_spark.operators.dedup import (
     normalized_tokens,
@@ -638,8 +639,8 @@ def bpe_merges(
     string-stream formulation)."""
     merges, _ = _bpe_fuse_stream(df, n_merges, id_col, text_col)
     spark = df.sparkSession
-    return spark.createDataFrame(
-        merges, "step int, pair string, n_occurrences long"
+    return local_frame(
+        spark, merges, "step int, pair string, n_occurrences long"
     )
 
 

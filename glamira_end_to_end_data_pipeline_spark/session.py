@@ -102,6 +102,15 @@ def get_spark(
             ),
         )
         .config("spark.sql.parquet.filterPushdown", "true")
+        # Spark keeps 100 generated classes by default. One curation pass
+        # plus its IVF lookup (text_pretraining_pipeline + ivf_topk) uses
+        # more distinct classes than that, so the LRU cache evicted each
+        # class before its next use: on the curate_corpus benchmark
+        # (4 vCPUs) every warm operation recompiled 55 classes with Janino
+        # and the JIT compiled them again. At 1000 a warm pass compiles
+        # none (the lookup's 3 come from its new isin() literals). Static
+        # conf: it applies only in a fresh JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Parquet TIMESTAMP(NANOS) (events.ts) is otherwise unreadable in
         # Spark 4 — read as long and convert in the source layer.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from glamira_end_to_end_data_pipeline_spark.frames import local_frame
+
 
 def write_partitioned(
     df: DataFrame,
@@ -1697,7 +1699,8 @@ def read_snapshot_mor(
     eras_list = doc.get("eras")
     base = spark.read.parquet(*files)
     if eras_list and len(eras_list) == len(files):
-        era_df = spark.createDataFrame(
+        era_df = local_frame(
+            spark,
             [(_norm_uri(f), int(e)) for f, e in zip(files, eras_list)],
             "__fn string, __mf_era long",
         )

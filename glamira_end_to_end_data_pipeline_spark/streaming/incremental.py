@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from glamira_end_to_end_data_pipeline_spark.frames import local_frame
+
 # batch_id is the partition directory (``batch_id=N``), not a data
 # column — readers see it via partition discovery.
 AUDIT_SCHEMA = (
@@ -82,7 +84,8 @@ def incremental_file_load(
             batch.write.mode("overwrite").parquet(
                 os.path.join(target_dir, f"batch_id={batch_id}")
             )
-            audit = spark_b.createDataFrame(
+            audit = local_frame(
+                spark_b,
                 [(table_name, stats["n"], files, "ok")],
                 "target_table string, row_count long, "
                 "source_files array<string>, status string",

@@ -4,10 +4,11 @@ Usage: python scripts/time_entry.py <name> [<name> ...] [--runs N]
 
 Times each named registry entry exactly like bench.py does (plan →
 noop sink on the warm session), printing every run plus the min —
-the steady-state number the bench would record — and the Spark jobs
-and stages each run issued (from the JVM status store), so a job-count
-regression shows without a benchmark run. Keeps the bench contract
-untouched; this is a measurement-only tool.
+the steady-state number the bench would record — the Spark jobs and
+stages each run issued (from the JVM status store) and the classes it
+compiled (Janino compiles, i.e. codegen-cache misses), so a job-count
+regression or codegen-cache thrash shows without a benchmark run.
+Keeps the bench contract untouched; this is a measurement-only tool.
 """
 
 from __future__ import annotations
@@ -39,6 +40,13 @@ def jobs_and_stages(spark, group: str) -> tuple[int, int]:
         if store.lastStageAttempt(sid).status().toString() != "SKIPPED"
     }
     return len(jobs), len(stages)
+
+
+def classes_compiled(spark) -> int:
+    """Generated classes compiled so far in this JVM (codegen-cache
+    misses; a warm run that finds every class cached adds 0)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
 
 
 def main() -> None:
@@ -77,15 +85,19 @@ def main() -> None:
     )
 
     for name in args:
-        ts, js = [], []
+        ts, js, cs = [], [], []
         for i in range(runs):
             group = f"{name}#{i}"
             spark.sparkContext.setJobGroup(group, name)
+            c0 = classes_compiled(spark)
             t0 = time.time()
             consume(qs[name](spark, sf_dir))
             ts.append(round(time.time() - t0, 3))
+            cs.append(classes_compiled(spark) - c0)
             js.append("{}/{}".format(*jobs_and_stages(spark, group)))
-        print(f"{name}: runs={ts} min={min(ts)} jobs/stages={js}")
+        print(
+            f"{name}: runs={ts} min={min(ts)} jobs/stages={js} classes_compiled={cs}"
+        )
 
 
 if __name__ == "__main__":

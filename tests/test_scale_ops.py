@@ -270,6 +270,69 @@ def test_pretraining_pipeline_corpus_never_shuffles_on_doc_id(spark):
     assert "hashpartitioning(doc_id" not in plan, plan
 
 
+def test_pretraining_pipeline_plan_has_no_python_round_trip(spark):
+    """Driver-built frames in the curation plan (the connected-components
+    labels) are LocalRelations: no scan of a pickled RDD, which would
+    run through PySpark workers every time the plan reads it."""
+    from __spark_entry__ import queries
+    from tests.conftest import SF_SMALL
+
+    df = queries()["text_pretraining_pipeline"](spark, SF_SMALL)
+    df.collect()  # the final adaptive plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+
+
+def test_warm_repeat_compiles_nothing(spark):
+    """A warm curation pass plus its IVF lookup finds every generated
+    class in the codegen cache: the second round compiles nothing. With
+    Spark's default cache of 100 classes one round's classes evict each
+    other and the second round recompiles (60 classes here)."""
+    from __spark_entry__ import queries
+    from glamira_end_to_end_data_pipeline_spark.operators import similarity
+    from glamira_end_to_end_data_pipeline_spark.sources import read_table
+    from tests.conftest import SF_SMALL
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    emb = read_table(spark, SF_SMALL, "embeddings")
+    q = emb.filter(F.col("vec_id") < 10)
+    c = emb.filter(F.col("vec_id") >= 10)
+    cells = similarity.ivf_centroids(c)
+
+    def one_round() -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        queries()["text_pretraining_pipeline"](spark, SF_SMALL).toPandas()
+        similarity.ivf_topk(q, c, k=5, cents=cells).collect()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    try:
+        one_round()
+        assert one_round() == 0
+    finally:
+        cells.release()
+
+
+def test_local_frame_is_local_relation_with_create_dataframe_rows(spark):
+    """local_frame gives createDataFrame's rows and schema as a
+    LocalRelation, also for zero rows and nested types."""
+    from glamira_end_to_end_data_pipeline_spark.frames import local_frame
+
+    cases = [
+        ([(3, 1), (1, 1), (2, 2)], "doc_id long, cluster_id long"),
+        ([], "node long, scc_id long"),
+        ([(1, "a b", 7)], "step int, pair string, n_occurrences long"),
+        ([("t", 2, ["x", "y"], "ok")], "t string, n long, f array<string>, s string"),
+    ]
+    for rows, ddl in cases:
+        got = local_frame(spark, rows, ddl)
+        want = spark.createDataFrame(rows, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+        assert got._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < 10**6
+
+
 def test_zorder_write_clusters_both_dimensions(spark, tmp_path):
     """A Z-ordered write must let min/max stats prune range filters on
     BOTH dimensions; a single-column sort prunes only its own column

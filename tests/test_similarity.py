@@ -359,3 +359,84 @@ def test_ivf_drift_monitor_gates_lloyd_refresh(spark):
         "cell", ivf_cell_bulk(F.col("c_vec"), F.col("c_norm"), refreshed)
     )
     assert ivf_drift_min_cos(a_re, refreshed) > drift
+
+
+def _outside_cached_plans(plan: str) -> list[str]:
+    """Plan lines that are not part of a persisted frame's own plan
+    (the subtree printed under each ``InMemoryRelation``)."""
+    kept, skip_below = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = depth if "InMemoryRelation" in line else None
+        kept.append(line)
+    return kept
+
+
+def test_ivf_topk_reuses_inverted_lists_of_its_own_corpus(spark):
+    """Cells from ivf_centroids own the corpus's inverted lists: repeated
+    lookups give the plain-list answer, scan the persisted assignment
+    instead of re-running the assignment kernel, reuse only for the
+    corpus frame the cells were built from (and not when Lloyd
+    refinement changes the centroids), and leave no persisted RDD
+    behind once the cells are released."""
+    emb = _emb(spark)
+    q = emb.filter(F.col("vec_id") < 10)
+    c = emb.filter(F.col("vec_id") >= 10)
+    jsc = spark.sparkContext._jsc
+    persisted_before = jsc.getPersistentRDDs().size()
+    cells = similarity.ivf_centroids(c)
+    assert isinstance(cells, list) and list(cells) == cells
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def executed(df):  # before execution: the plan without AQE's stages
+        return _outside_cached_plans(
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+
+    def assign_kernels(plan):  # Python evaluations besides the pair cosine
+        return sum(
+            "ArrowEvalPython" in ln and "_pair_cosine_fn" not in ln for ln in plan
+        )
+
+    # a plain list assigns the corpus in the lookup's own plan
+    fresh = executed(similarity.ivf_topk(q, c, k=5, cents=list(cells)))
+    assert not any("InMemoryTableScan" in ln for ln in fresh)
+    assert assign_kernels(fresh) >= 1, fresh
+    want = rows(similarity.ivf_topk(q, c, k=5, cents=list(cells)))
+
+    assert rows(similarity.ivf_topk(q, c, k=5, cents=cells)) == want
+    assert rows(similarity.ivf_topk(q, c, k=5, cents=cells)) == want
+    # the corpus side of a later lookup is the persisted assignment
+    # (c itself is not persisted); only the pair cosine runs in Python
+    reused = executed(similarity.ivf_topk(q, c, k=5, cents=cells))
+    assert any("InMemoryTableScan" in ln and "cell#" in ln for ln in reused)
+    assert assign_kernels(reused) == 0, reused
+
+    # another corpus frame, or refined centroids: the lookup assigns
+    # its corpus itself
+    other = emb.filter(F.col("vec_id") >= 12)
+    assert cells.inverted_lists(other, "vec_id", "embedding") is None
+    assert cells.inverted_lists(c, "vec_id", "other") is None
+    for df in (
+        similarity.ivf_topk(q, other, k=5, cents=cells),
+        similarity.ivf_topk(q, c, k=5, cents=cells, refine_iters=1),
+    ):
+        plan = executed(df)
+        assert not any("InMemoryTableScan" in ln for ln in plan), plan
+        assert assign_kernels(plan) >= 1, plan
+    assert rows(similarity.ivf_topk(q, other, k=5, cents=cells)) == rows(
+        similarity.ivf_topk(q, other, k=5, cents=list(cells))
+    )
+
+    assert jsc.getPersistentRDDs().size() > persisted_before
+    cells.release()
+    assert jsc.getPersistentRDDs().size() == persisted_before
+    cells.release()  # idempotent
+    # released cells rebuild their lists on the next lookup
+    assert rows(similarity.ivf_topk(q, c, k=5, cents=cells)) == want
+    cells.release()
+    assert jsc.getPersistentRDDs().size() == persisted_before
