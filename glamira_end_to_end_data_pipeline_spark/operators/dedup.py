@@ -55,12 +55,6 @@ def shingles_from_tokens(toks: F.Column | str, n: int = 3) -> F.Column:
     return F.when(k >= 1, grams).otherwise(F.array().cast("array<string>"))
 
 
-def word_shingles(text_col: str = "text", n: int = 3) -> F.Column:
-    """Inline-tokenizing variant of ``shingles_from_tokens`` — fine for
-    one-shot use on narrow inputs; prefer materializing tokens first."""
-    return shingles_from_tokens(normalized_tokens(text_col), n)
-
-
 def exploded_shingles(
     df: DataFrame,
     id_col: str = "doc_id",

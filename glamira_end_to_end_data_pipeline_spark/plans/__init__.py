@@ -1,1115 +1,29 @@
-"""Query-registry assembly + driver-window ordering.
-
-The driver's correctness gate grades ``list(QUERIES)[:50]`` — the first
-50 entries in registration order — per round. After round 5 every one
-of the 180 registered entries has at least one green driver grade (the
-frozensets ``_R2_GREEN`` … ``_R5_GREEN`` mirror
-CORRECTNESS_r0{2,3,4,5}.json), so from round 6 the window switches to
-STALENESS ROTATION — "ever green" is not "still green" when shared
-helpers churn underneath 130 unre-checked entries per round. The
-rebuilt order is:
-
-1. ``_ROTATE_FIRST_R8`` — entries whose IMPLEMENTATION changed this
-   round (the r7 VERDICT/ADVICE fixes: banded-join hot-bucket caps +
-   the unsigned slice-extraction fix with oracles that now reproduce
-   the banding, the SCC trim pre-pass + extended fixture, the graph
-   family's adaptive-doubling probes, the pack_shards tiebreak, the
-   checkpointed `ever`/`ever_delta` manifest bookkeeping) — re-graded
-   the round their code moves;
-2. fresh round-8 entries (never driver-graded) in registration order —
-   fresh work is graded the round it ships;
-3. every already-graded entry, ordered by how STALE its latest green
-   is (last-graded round ascending, registration order within a
-   round) — the window tail picks up the entries longest unre-checked;
-   round 9 continues from wherever round 8's 50-slot window ends.
-
-The dicts are mutated in place so every existing ``from ... import
-QUERIES`` reference observes the new order.
+"""Query registry: ``QUERIES`` maps an entry name to its Spark plan and
+``ORACLES`` maps the same name to its DuckDB SQL twin. Each module
+registers its entries as an import side effect, so both dicts iterate in
+registration order: ``queries`` first, then the modules imported below,
+in this order.
 """
 
 from glamira_end_to_end_data_pipeline_spark.plans.queries import ORACLES, QUERIES
 
-# registration side-effects: each module adds entries to QUERIES/ORACLES
-from glamira_end_to_end_data_pipeline_spark.plans import (  # noqa: E402,F401
+from glamira_end_to_end_data_pipeline_spark.plans import (  # noqa: F401
     ingest_queries,
     northstar_queries,
     star_queries,
     streaming_queries,
+    extra_queries,
+    r5_queries,
+    r6_queries,
+    r7_queries,
+    r8_queries,
+    r9_queries,
+    r10_queries,
+    r11_queries,
+    r12_queries,
+    r13_queries,
+    r14_queries,
+    r15_queries,
 )
-from glamira_end_to_end_data_pipeline_spark.plans import extra_queries  # noqa: E402,F401
-from glamira_end_to_end_data_pipeline_spark.plans import r5_queries  # noqa: E402,F401
-
-# round-6 fresh entries — imported last; land behind the rotate-first
-# block, inside the round-6 window.
-from glamira_end_to_end_data_pipeline_spark.plans import r6_queries  # noqa: E402,F401
-
-# round-7 fresh entries — never graded, so _last_graded() == 0 places
-# them right behind the round-7 rotate-first block.
-from glamira_end_to_end_data_pipeline_spark.plans import r7_queries  # noqa: E402,F401
-
-# round-8 fresh entries — never graded; land behind the round-8
-# rotate-first block, inside the round-8 window.
-from glamira_end_to_end_data_pipeline_spark.plans import r8_queries  # noqa: E402,F401
-
-# round-9 fresh entries — never graded; land behind the round-9
-# rotate-first block, inside the round-9 window.
-from glamira_end_to_end_data_pipeline_spark.plans import r9_queries  # noqa: E402,F401
-
-# round-10 fresh entries — never graded; land behind the round-10
-# rotate-first block, inside the round-10 window.
-from glamira_end_to_end_data_pipeline_spark.plans import r10_queries  # noqa: E402,F401
-
-# round-11 fresh entries — never graded; land behind the round-11
-# rotate-first block, inside the round-11 window.
-from glamira_end_to_end_data_pipeline_spark.plans import r11_queries  # noqa: E402,F401
-
-# round-12 fresh entries — added while the round-11 window was already
-# locked; they join the defer block (``_DEFER_FRESH_R12``) so the r11
-# staleness-drain cohort keeps its window slots, and the
-# ``_last_graded() == 0`` rule pulls them forward for round 12.
-from glamira_end_to_end_data_pipeline_spark.plans import r12_queries  # noqa: E402,F401
-
-# round-13 fresh entries — never graded; the ``_last_graded() == 0``
-# rule places them behind the round-13 defer block, inside the window.
-from glamira_end_to_end_data_pipeline_spark.plans import r13_queries  # noqa: E402,F401
-
-# round-14 fresh entries — the ``_last_graded() == 0`` rule places
-# them behind the round-14 rotate-first block, inside the window.
-from glamira_end_to_end_data_pipeline_spark.plans import r14_queries  # noqa: E402,F401
-
-# round-15 fresh entries — the ``_last_graded() == 0`` rule places
-# them behind the round-15 deferral first-grades, inside the window.
-from glamira_end_to_end_data_pipeline_spark.plans import r15_queries  # noqa: E402,F401
-
-# Round-8 front-loads: entries whose code changed in round 8, re-graded
-# the round their implementation moves. graph_scc_exact: TRIM pre-pass
-# + trivial-chain fixture + doubling probes; dedup_minhash_lsh /
-# dedup_simhash / mm_phash_near_dup: hot-bucket caps mirrored into the
-# oracles (the simhash/phash oracles now reproduce the banded join
-# itself) + the unsigned slice-extraction fix + the phash hub fixture;
-# the rest of the graph family: adaptive-doubling convergence probes /
-# lazy-cascade checkpoints (results fixed-point-invariant — re-proved
-# here); mm_shard_pack: pack_shards tiebreak parameter; the manifest
-# block: checkpointed `ever`+`ever_delta` bookkeeping reseats every
-# snapshot/manifest-walking entry.
-_ROTATE_FIRST_R8 = (
-    "graph_scc_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "mm_phash_near_dup",
-    "graph_kcore_exact",
-    "graph_lpa_exact",
-    "graph_pagerank",
-    "graph_kcore",
-    "graph_lpa_communities",
-    "mm_shard_pack",
-    "lake_incremental_across_compaction",
-    "lake_rollback_commit",
-    "lake_compact_commit",
-    "lake_snapshot_read",
-    "lake_snapshot_diff",
-    "stream_snapshot_commits",
-    "stream_cdc_apply",
-)
-
-# Round-9 front-loads: the two r8 reds (oracle sums now CAST AS BIGINT
-# — the engine values were verified identical, DuckDB's HUGEINT sum
-# broke the value hash), plus entries whose implementation moves this
-# round: sample_priority_weighted (ADVICE n<=k regime fix),
-# a_poisson_bootstrap_ci (ADVICE zero-weight-replicate guard),
-# graph_scc_exact + the convergence-looped graph family (trim-skip +
-# probe batching), lake_rollback_commit (checkpointed-`ever` read-path
-# re-measure).
-_ROTATE_FIRST_R9 = (
-    "sample_mix_stratified",
-    "text_seq_pack_split",
-    "sample_priority_weighted",
-    "a_poisson_bootstrap_ci",
-    "graph_scc_exact",
-    "graph_bfs_distances",
-    "graph_kcore_exact",
-    "graph_lpa_exact",
-    "lake_rollback_commit",
-)
-
-# Driver-green in CORRECTNESS_r09.json (round-9 window, 50/50 green:
-# the 9 rotate-first re-grades + 24 fresh r9 entries + the stalest
-# r4-era re-grades).
-_R9_GREEN = frozenset(
-    {
-        "sample_mix_stratified",
-        "text_seq_pack_split",
-        "sample_priority_weighted",
-        "a_poisson_bootstrap_ci",
-        "graph_scc_exact",
-        "graph_bfs_distances",
-        "graph_kcore_exact",
-        "graph_lpa_exact",
-        "lake_rollback_commit",
-        "w_cumulative_distinct",
-        "a_ttest_ab",
-        "sample_reservoir_per_stratum",
-        "text_zipf_octaves",
-        "j_multitouch_attribution",
-        "emb_centroid_drift",
-        "w_sessionize_incremental",
-        "lake_wap_publish",
-        "emb_hard_negatives",
-        "dq_benford_mad",
-        "w_ewma_anomaly",
-        "emb_pca_top_direction",
-        "text_length_buckets",
-        "sample_temperature_mix",
-        "a_bloom_filter_probe",
-        "graph_randwalk_corpus",
-        "lake_partition_evolution",
-        "emb_srp_sketch_recall",
-        "graph_ego_sample",
-        "w_period_over_period",
-        "j_bloom_prefilter_join",
-        "dq_checksum_reconcile",
-        "stream_wap_microbatch",
-        "emb_binary_quant_recall",
-        "q7_volume_shipping",
-        "q10_returned_items",
-        "q14_promo_effect",
-        "q20_excess_shippers",
-        "q19_disjunctive_revenue",
-        "q22_dormant_balances",
-        "q8_market_share",
-        "q13_customer_distribution",
-        "q9_product_profit",
-        "q11_important_parts",
-        "q15_top_supplier",
-        "q16_supplier_part_counts",
-        "q17_small_quantity_revenue",
-        "dq_volume_anomaly",
-        "a_histogram",
-        "lake_zorder_codes",
-        "a_grouping_sets",
-    }
-)
-
-
-# Round-10 front-loads: entries whose implementation moved this round —
-# sample_priority_weighted (tie-at-tau break on doc_id, engine+oracle),
-# graph_scc_exact (trim re-arm after peeling rounds + stats out-param),
-# every lake/WAP entry whose metadata path changed (fs.open manifest
-# reads replacing per-read Spark jobs; stage dirs keyed by
-# (branch, base_version); spec-pruned reads probe-typed + Hive-escaped),
-# and the three entries the r9 VERDICT flagged for a quiet-host
-# re-measure (dq_psi_drift, lake_merge_delete, j_fuzzy_name_match).
-_ROTATE_FIRST_R10 = (
-    "sample_priority_weighted",
-    "graph_scc_exact",
-    "lake_wap_publish",
-    "stream_wap_microbatch",
-    "lake_partition_evolution",
-    "lake_merge_delete",
-    "lake_rollback_commit",
-    "dq_psi_drift",
-    "j_fuzzy_name_match",
-)
-
-# Round-11 front-loads: entries whose implementation moved this round.
-# The lake block sits on the r10-ADVICE fixes — per-file eras recorded
-# in every manifest + the manifest-map era source in read_snapshot_mor
-# (lake_mor_equality_deletes, lake_compact_mor), the crash-safe
-# _rewrite_json_atomic cutoff rewrite (lake_expire_versions), the WAP
-# path whose published files now carry a real era
-# (lake_wap_publish, stream_wap_microbatch), and the bool-probe /
-# probe-typed pruning normalization (lake_partition_evolution,
-# lake_stats_pruned_read — the latter also drains an r5-stale slot).
-# The graph pair re-grades the broadcast-hatch parameterization
-# (personalized PPR per the r10 VERDICT task 1; graph_triangles is the
-# r5-stale member of the degree-broadcast family — jaccard/adamic were
-# oracle-checked locally this round and rotate on staleness).
-_ROTATE_FIRST_R11 = (
-    "lake_mor_equality_deletes",
-    "lake_compact_mor",
-    "lake_expire_versions",
-    "lake_wap_publish",
-    "stream_wap_microbatch",
-    "lake_partition_evolution",
-    "lake_stats_pruned_read",
-    "graph_pagerank_personalized",
-    "graph_triangles",
-)
-
-# Round-12 front-loads: entries whose implementation moved this round —
-# the sixteen TPC-H suite entries that lost their SF-proportional
-# F.broadcast hints (customer/part/supplier sides now carry NO hint;
-# statistics/AQE pick broadcast-vs-shuffle — the r11 VERDICT's one
-# systemic `weak`, enforced henceforth by tests/test_broadcast_audit.py),
-# plus w_theil_sen_trend (same hint strip in r11_queries.py) and
-# j_bloom_prefilter_join (its customer-dim verification join lost the
-# hint too). Code-touched NEVER-graded entries (lake_merge_multi_clause,
-# lake_position_deletes, lake_check_constraint_commit,
-# graph_pointer_jump_roots, dq_bh_fdr_proportions,
-# w_lagged_cross_correlation, a_ratio_metric_delta_ci,
-# a_beta_binomial_shrinkage) grade this round via the fresh block.
-_ROTATE_FIRST_R12 = (
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q20_excess_shippers",
-    "q21_waiting_suppliers",
-    "w_theil_sen_trend",
-    "j_bloom_prefilter_join",
-)
-
-# Driver-green in CORRECTNESS_r11.json (round-11 window, 50/50 green).
-_R11_GREEN = frozenset(
-    {
-        "lake_mor_equality_deletes", "lake_compact_mor",
-        "lake_expire_versions", "lake_wap_publish", "stream_wap_microbatch",
-        "lake_partition_evolution", "lake_stats_pruned_read",
-        "graph_pagerank_personalized", "graph_triangles",
-        "lake_mor_dense_deletes", "w_theil_sen_trend",
-        "dq_benford_first_digit", "flagship_daily_events",
-        "p1_typed_projection", "p6_p7_membership_coalesce",
-        "q1_pricing_summary", "q3_shipping_priority",
-        "a1_a3_topk_event_types", "a2_multicol_distinct",
-        "a5_minmax_date_range", "a6_a7_worklist_pick",
-        "j1_j5_star_join_defaults", "j3_computed_date_key_join",
-        "j4_composite_key_null_miss", "j7_anti_join_unprocessed",
-        "j9_not_in_null_aware", "q4_semi_join_priority",
-        "q6_forecast_revenue", "q5_local_supplier_volume",
-        "q18_large_volume_customers", "q2_min_cost_supplier",
-        "q12_priority_by_flag", "emb_ivf_kcenter_topk",
-        "a_incremental_rollup_merge", "text_tfidf_topterms",
-        "dedup_cross_batch_minhash", "dq_profile_columns",
-        "j_interval_overlap", "emb_ivf_partitioned_prune",
-        "dedup_containment_snippets", "s_jsonl_round_trip",
-        "dq_freshness_check", "a_countmin_tokens", "text_bigram_pmi",
-        "dq_k_anonymity", "lake_schema_evolution_snapshot",
-        "dedup_minhash_estimate", "stream_watermark_finalization",
-        "j10_null_safe_join", "w10_rank_distributions",
-    }
-)
-
-# Driver-green in CORRECTNESS_r10.json (round-10 window, 50/50 green).
-_R10_GREEN = frozenset(
-    {
-        "sample_priority_weighted", "graph_scc_exact", "lake_wap_publish",
-        "stream_wap_microbatch", "lake_partition_evolution",
-        "lake_merge_delete", "lake_rollback_commit", "dq_psi_drift",
-        "j_fuzzy_name_match", "graph_scc_hybrid_live",
-        "lake_mor_equality_deletes", "lake_read_by_tag",
-        "dq_schema_drift_detect", "a_heavy_hitters_mg", "dq_ks_two_sample",
-        "sample_neyman_allocation", "graph_pagerank_personalized",
-        "j_grid_neighbor_join", "stream_late_sideoutput",
-        "w_holt_linear_trend", "lake_compact_mor",
-        "dq_chi2_categorical_drift", "w_cusum_changepoint",
-        "lake_expire_versions", "a_corr_stats", "w_sessionize_batch",
-        "dedup_retain_corpus", "emb_pq_codes", "emb_pq_adc_topk",
-        "emb_ivfpq_topk", "text_chunk_documents", "text_char_entropy",
-        "text_sample_stratified", "text_mix_epochs", "text_lm_score",
-        "text_bm25_topk", "dedup_segment_boilerplate", "text_bpe_merges",
-        "dedup_semantic_retain", "text_hybrid_rrf", "text_dsir_select",
-        "emb_ann_recall", "text_bpe_encode", "text_ppl_buckets",
-        "emb_indexing_pipeline", "text_classifier_score",
-        "text_domain_cap", "emb_mmr_rerank", "s_orc_round_trip",
-        "lake_gc_orphans",
-    }
-)
-
-# Driver-green in CORRECTNESS_r02.json (round-2 window).
-_R2_GREEN = frozenset(
-    {
-        "flagship_daily_events",
-        "p1_typed_projection",
-        "p6_p7_membership_coalesce",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "a1_a3_topk_event_types",
-        "a2_multicol_distinct",
-        "a5_minmax_date_range",
-        "a6_a7_worklist_pick",
-        "j1_j5_star_join_defaults",
-        "j3_computed_date_key_join",
-        "j4_composite_key_null_miss",
-        "j7_anti_join_unprocessed",
-        "j9_not_in_null_aware",
-        "q4_semi_join_priority",
-        "q6_forecast_revenue",
-        "q5_local_supplier_volume",
-        "q18_large_volume_customers",
-        "j_skew_salted",
-        "a_skewed_salted_agg",
-        "j_bucketed_colocated",
-        "j6_value_range_join",
-        "w1_dedup_latest",
-        "w3_date_spine",
-        "w6_forward_fill",
-        "w7_new_vs_returning",
-        "a_cohort_retention",
-        "a_funnel_conversion",
-        "w8_event_transitions",
-        "w9_ntile_quartiles",
-        "w5_scd2_user_segments",
-        "j8_asof_event_segments",
-        "w4_rolling_user_value",
-        "dq_schema_checks",
-        "f_json_parse_corrupt",
-        "f_date_parts_dim",
-        "f_surrogate_keys",
-        "f_ip_enrichment",
-        "f_string_cleaning",
-        "f_misc_scalars",
-        "a8_running_counters",
-        "a_approx_sketches",
-        "a_exact_percentiles",
-        "f_pandas_udaf_robust_stats",
-        "a_multigrain_rollup",
-        "a_cube_weekday_mix",
-        "a_pivot_daily_mix",
-        "setops_users_vs_customers",
-        "s7_master_schema_rules",
-        "s9_load_routing",
-    }
-)
-
-# Driver-green in CORRECTNESS_r03.json (round-3 window).
-_R3_GREEN = frozenset(
-    {
-        "s4_text_ip_worklist",
-        "s12_crawler_parse",
-        "emb_quantize_int8",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "dedup_clusters",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "emb_cosine_topk",
-        "emb_ann_lsh_topk",
-        "emb_ivf_topk",
-        "emb_near_dup_pairs",
-        "text_token_stats",
-        "text_quality_score",
-        "text_language_id",
-        "text_fingerprint",
-        "text_split_assign",
-        "text_pack_sequences",
-        "text_shuffle_shards",
-        "text_decontaminate",
-        "text_repetition_filter",
-        "text_quality_filter_stratified",
-        "text_vocab_topk",
-        "text_pii_scrub",
-        "star_stg_summary",
-        "star_dim_customer",
-        "star_dim_session_context",
-        "star_dim_date",
-        "star_dim_product",
-        "star_dim_location",
-        "star_fact_sales_order",
-        "stream_star_fact_incremental",
-        "stream_tumbling_event_counts",
-        "stream_session_windows",
-        "stream_sliding_window_counts",
-        "stream_dedup_replayed",
-        "stream_interval_join_attribution",
-        "s5_s6_incremental_ingest",
-        "s_csv_round_trip",
-        "s_schema_evolution",
-        "s_partitioned_lake",
-        "mm_extract_features",
-        "mm_feature_ann_topk",
-        "mm_resize_images",
-        "mm_video_frame_sample",
-        "q2_min_cost_supplier",
-        "q21_waiting_suppliers",
-        "emb_ivf_refined_topk",
-        "star_date_range",
-        "text_pretraining_pipeline",
-    }
-)
-
-# Driver-green in CORRECTNESS_r04.json (round-4 window; the only red
-# row was q12_priority_by_flag, an oracle typing bug fixed and
-# re-greened in round 5).
-_R4_GREEN = frozenset(
-    {
-        "q7_volume_shipping",
-        "q8_market_share",
-        "q10_returned_items",
-        "q13_customer_distribution",
-        "q14_promo_effect",
-        "q20_excess_shippers",
-        "dq_volume_anomaly",
-        "a_histogram",
-        "lake_zorder_codes",
-        "dedup_retain_corpus",
-        "dedup_winnowing_pairs",
-        "emb_pq_codes",
-        "emb_pq_adc_topk",
-        "emb_ivfpq_topk",
-        "text_chunk_documents",
-        "text_char_entropy",
-        "text_sample_stratified",
-        "text_mix_epochs",
-        "text_lm_score",
-        "text_bm25_topk",
-        "q19_disjunctive_revenue",
-        "q22_dormant_balances",
-        "q9_product_profit",
-        "q11_important_parts",
-        "q15_top_supplier",
-        "q16_supplier_part_counts",
-        "q17_small_quantity_revenue",
-        "a_grouping_sets",
-        "a_corr_stats",
-        "graph_pagerank",
-        "w_sessionize_batch",
-        "dedup_segment_boilerplate",
-        "text_bpe_merges",
-        "dedup_semantic_retain",
-        "text_hybrid_rrf",
-        "text_dsir_select",
-        "emb_ann_recall",
-        "text_bpe_encode",
-        "text_ppl_buckets",
-        "emb_indexing_pipeline",
-        "text_classifier_score",
-        "text_domain_cap",
-        "emb_mmr_rerank",
-        "s_orc_round_trip",
-        "lake_merge_upsert",
-        "lake_snapshot_read",
-        "lake_gc_orphans",
-        "lake_compact_commit",
-        "stream_snapshot_commits",
-    }
-)
-
-# Driver-green in CORRECTNESS_r05.json (round-5 window, 50/50 green:
-# the 31 never-graded r5 additions + 19 re-graded r2/r3-era fillers).
-_R5_GREEN = frozenset(
-    {
-        "q12_priority_by_flag",
-        "graph_triangles",
-        "stream_cdc_apply",
-        "graph_link_prediction",
-        "graph_adamic_adar",
-        "graph_kcore",
-        "emb_ivf_kcenter_topk",
-        "lake_incremental_across_compaction",
-        "a_incremental_rollup_merge",
-        "text_tfidf_topterms",
-        "dedup_cross_batch_minhash",
-        "dq_profile_columns",
-        "j_interval_overlap",
-        "emb_ivf_partitioned_prune",
-        "dedup_containment_snippets",
-        "s_jsonl_round_trip",
-        "scd2_apply_changes",
-        "dq_freshness_check",
-        "a_countmin_tokens",
-        "text_bigram_pmi",
-        "dq_k_anonymity",
-        "lake_schema_evolution_snapshot",
-        "dedup_minhash_estimate",
-        "stream_watermark_finalization",
-        "lake_stats_pruned_read",
-        "graph_lpa_communities",
-        "lake_rollback_commit",
-        "j10_null_safe_join",
-        "w10_rank_distributions",
-        "dq_psi_drift",
-        "j_fuzzy_name_match",
-        "flagship_daily_events",
-        "p1_typed_projection",
-        "p6_p7_membership_coalesce",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "a1_a3_topk_event_types",
-        "a2_multicol_distinct",
-        "a5_minmax_date_range",
-        "a6_a7_worklist_pick",
-        "j1_j5_star_join_defaults",
-        "j3_computed_date_key_join",
-        "j4_composite_key_null_miss",
-        "j7_anti_join_unprocessed",
-        "j9_not_in_null_aware",
-        "q4_semi_join_priority",
-        "q6_forecast_revenue",
-        "q5_local_supplier_volume",
-        "q18_large_volume_customers",
-        "q2_min_cost_supplier",
-    }
-)
-
-# Driver-green in CORRECTNESS_r06.json (round-6 window, 50/50 green:
-# the front-loaded ADVICE-r5 re-grades + 12 fresh r6 entries + the 30
-# stalest r2-era re-grades).
-_R6_GREEN = frozenset(
-    {
-        "dq_psi_drift",
-        "lake_rollback_commit",
-        "lake_incremental_across_compaction",
-        "lake_snapshot_read",
-        "stream_cdc_apply",
-        "scd2_apply_changes",
-        "graph_link_prediction",
-        "graph_adamic_adar",
-        "graph_kcore_exact",
-        "graph_lpa_exact",
-        "scd2_apply_wide_dim",
-        "dq_benford_check",
-        "text_url_canonicalize",
-        "dq_referential_integrity",
-        "emb_matryoshka_recall",
-        "a_hll_rollup_merge",
-        "lake_merge_delete",
-        "stream_static_enrich",
-        "j_skew_salted",
-        "a_skewed_salted_agg",
-        "j_bucketed_colocated",
-        "j6_value_range_join",
-        "w1_dedup_latest",
-        "w3_date_spine",
-        "w6_forward_fill",
-        "w7_new_vs_returning",
-        "a_cohort_retention",
-        "a_funnel_conversion",
-        "w8_event_transitions",
-        "w9_ntile_quartiles",
-        "w5_scd2_user_segments",
-        "j8_asof_event_segments",
-        "w4_rolling_user_value",
-        "dq_schema_checks",
-        "f_json_parse_corrupt",
-        "f_date_parts_dim",
-        "f_surrogate_keys",
-        "f_ip_enrichment",
-        "f_string_cleaning",
-        "f_misc_scalars",
-        "a8_running_counters",
-        "a_approx_sketches",
-        "a_exact_percentiles",
-        "f_pandas_udaf_robust_stats",
-        "a_multigrain_rollup",
-        "a_cube_weekday_mix",
-        "a_pivot_daily_mix",
-        "setops_users_vs_customers",
-        "s7_master_schema_rules",
-        "s9_load_routing",
-    }
-)
-
-# Driver-green in CORRECTNESS_r07.json (round-7 window, 50/50 green).
-_R7_GREEN = frozenset(
-    {
-        "scd2_apply_changes",
-        "scd2_apply_wide_dim",
-        "dedup_winnowing_pairs",
-        "dq_referential_integrity",
-        "text_url_canonicalize",
-        "lake_merge_delete",
-        "lake_merge_upsert",
-        "lake_incremental_across_compaction",
-        "lake_rollback_commit",
-        "stream_cdc_apply",
-        "stream_snapshot_commits",
-        "lake_compact_commit",
-        "lake_snapshot_diff",
-        "j_asof_tolerance",
-        "a_histogram_rollup_merge",
-        "dq_outlier_mad",
-        "dedup_exact_spans",
-        "emb_filtered_ann_topk",
-        "w_gaps_islands",
-        "mm_phash_near_dup",
-        "mm_shard_pack",
-        "graph_scc_exact",
-        "a_decimal_money_sum",
-        "q21_waiting_suppliers",
-        "s4_text_ip_worklist",
-        "s12_crawler_parse",
-        "emb_quantize_int8",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "dedup_clusters",
-        "text_pretraining_pipeline",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "emb_cosine_topk",
-        "emb_ann_lsh_topk",
-        "emb_ivf_topk",
-        "emb_ivf_refined_topk",
-        "emb_near_dup_pairs",
-        "text_token_stats",
-        "text_quality_score",
-        "text_language_id",
-        "text_fingerprint",
-        "text_split_assign",
-        "text_pack_sequences",
-        "text_shuffle_shards",
-        "text_decontaminate",
-        "text_repetition_filter",
-        "text_quality_filter_stratified",
-        "text_vocab_topk",
-        "text_pii_scrub",
-    }
-)
-
-# Driver-green in CORRECTNESS_r08.json (round-8 window, 48/50: the two
-# reds were oracle-typing bugs — DuckDB HUGEINT sums vs Spark BIGINT —
-# fixed by casting the oracle sums, front-loaded below).
-_R8_GREEN = frozenset(
-    {
-        "graph_scc_exact",
-        "dedup_minhash_lsh",
-        "dedup_simhash",
-        "mm_phash_near_dup",
-        "graph_kcore_exact",
-        "graph_lpa_exact",
-        "graph_pagerank",
-        "graph_kcore",
-        "graph_lpa_communities",
-        "mm_shard_pack",
-        "lake_incremental_across_compaction",
-        "lake_rollback_commit",
-        "lake_compact_commit",
-        "lake_snapshot_read",
-        "lake_snapshot_diff",
-        "stream_snapshot_commits",
-        "stream_cdc_apply",
-        "a_kmv_distinct_merge",
-        "text_bigram_lm_score",
-        "graph_bfs_distances",
-        "dedup_cdc_chunks",
-        "a_kmv_setops",
-        "mm_audio_energy",
-        "sample_priority_weighted",
-        "a_poisson_bootstrap_ci",
-        "w_rolling_median",
-        "star_stg_summary",
-        "star_dim_customer",
-        "star_dim_session_context",
-        "star_date_range",
-        "star_dim_date",
-        "star_dim_product",
-        "star_dim_location",
-        "star_fact_sales_order",
-        "stream_star_fact_incremental",
-        "stream_tumbling_event_counts",
-        "stream_session_windows",
-        "stream_sliding_window_counts",
-        "stream_dedup_replayed",
-        "stream_interval_join_attribution",
-        "s5_s6_incremental_ingest",
-        "s_csv_round_trip",
-        "s_schema_evolution",
-        "s_partitioned_lake",
-        "mm_extract_features",
-        "mm_feature_ann_topk",
-        "mm_resize_images",
-        "mm_video_frame_sample",
-    }
-)
-
-
-# Driver-green in CORRECTNESS_r12.json (round-12 window, 50/50 green:
-# the 16 TPC-H hint-removal re-grades + w_theil_sen_trend +
-# j_bloom_prefilter_join rotate-first, then the 32-entry fresh fold).
-_R12_GREEN = frozenset(
-    {
-        "q2_min_cost_supplier", "q3_shipping_priority",
-        "q5_local_supplier_volume", "q7_volume_shipping",
-        "q8_market_share", "q9_product_profit", "q10_returned_items",
-        "q11_important_parts", "q14_promo_effect", "q15_top_supplier",
-        "q16_supplier_part_counts", "q17_small_quantity_revenue",
-        "q18_large_volume_customers", "q19_disjunctive_revenue",
-        "q20_excess_shippers", "q21_waiting_suppliers",
-        "w_theil_sen_trend", "j_bloom_prefilter_join",
-        "w_seasonal_decompose", "w_autocorrelation", "graph_hits_scores",
-        "a_ols_sufficient_stats", "lake_rewrite_manifests",
-        "a_weighted_quantiles_exact", "stream_delta_join_view",
-        "graph_closeness_landmarks", "dq_l_diversity",
-        "graph_shortest_path_counts", "scd2_type6_hybrid",
-        "a_gini_index_exact", "a_mutual_information_terms",
-        "lake_conditional_commit", "dq_mann_whitney_u", "a_spearman_corr",
-        "dq_t_closeness", "dq_bh_fdr_proportions",
-        "a_trimmed_winsorized_mean", "sample_consistent_hash_keys",
-        "a_event_sequence_match", "w_lagged_cross_correlation",
-        "lake_position_deletes", "graph_betweenness_source",
-        "lake_bucket_partition_prune", "stream_outer_join_unconverted",
-        "lake_merge_multi_clause", "graph_betweenness_batched",
-        "a_ratio_metric_delta_ci", "graph_pointer_jump_roots",
-        "lake_check_constraint_commit", "a_beta_binomial_shrinkage",
-    }
-)
-
-
-# Driver-green in CORRECTNESS_r13.json (round-13 window, 50/50 green:
-# 4 code-moved rotate-first + the 21 _DEFER_FRESH_R13 first-grades +
-# 7 fresh r13 entries + a 20-entry drain of the r6-stale cohort).
-_R13_GREEN = frozenset(
-    {
-        "a_cohort_retention", "a_funnel_conversion",
-        "a_kaplan_meier_survival", "a_logistic_irls_glm",
-        "a_market_basket_rules", "a_pareto_concentration",
-        "a_skewed_salted_agg", "dedup_lsh_index_incremental",
-        "dq_cramers_v", "dq_experiment_readout_panel",
-        "dq_schema_checks", "emb_ivf_incremental", "f_date_parts_dim",
-        "f_ip_enrichment", "f_json_parse_corrupt", "f_surrogate_keys",
-        "f_variant_semistructured", "f_variant_shredded_read",
-        "graph_betweenness_capstone", "graph_mst_boruvka",
-        "j1_j5_star_join_defaults", "j6_value_range_join",
-        "j8_asof_event_segments", "j_aqe_skew_join_split",
-        "j_bucketed_colocated", "j_dynamic_partition_pruning",
-        "j_skew_salted", "lake_deletion_vectors", "lake_dv_zorder_read",
-        "lake_mor_rewrite_compaction", "lake_position_deletes",
-        "lake_stats_incremental_maintenance",
-        "lake_zorder_prune_effectiveness", "s_bucket_pruned_scan",
-        "scd2_late_arriving_splice", "scd4_current_history_pair",
-        "star_fact_sales_order_incremental",
-        "stream_ivm_retractable_agg", "text_incremental_quality_gate",
-        "text_isotonic_calibration", "text_kneser_ney_bigram",
-        "w1_dedup_latest", "w3_date_spine", "w4_rolling_user_value",
-        "w5_scd2_user_segments", "w6_forward_fill",
-        "w7_new_vs_returning", "w8_event_transitions",
-        "w9_ntile_quartiles", "w_sliding_distinct_users",
-    }
-)
-
-
-# Driver-green in CORRECTNESS_r14.json (round-14 window, 50/50 green:
-# 5 code-moved rotate-first + 3 fresh r14 entries + the 18-entry
-# r6-stale remainder + the first 24 of the r7-stale cohort).
-_R14_GREEN = frozenset(
-    {
-        "a8_running_counters", "a_approx_sketches",
-        "a_cube_weekday_mix", "a_exact_percentiles",
-        "a_hll_rollup_merge", "a_multigrain_rollup",
-        "a_pivot_daily_mix", "dedup_clusters", "dedup_exact",
-        "dedup_lsh_index_incremental", "dedup_ngram_jaccard",
-        "dedup_winnowing_pairs", "dq_benford_check",
-        "emb_ann_lsh_topk", "emb_cosine_topk",
-        "emb_ivf_incremental", "emb_ivf_incremental_refresh",
-        "emb_ivf_refined_topk", "emb_ivf_topk",
-        "emb_matryoshka_recall", "emb_near_dup_pairs",
-        "emb_quantize_int8", "f_misc_scalars",
-        "f_pandas_udaf_robust_stats", "f_string_cleaning",
-        "graph_adamic_adar", "graph_cc_incremental",
-        "graph_link_prediction", "lake_dv_zorder_read",
-        "lake_merge_mor", "lake_stats_incremental_maintenance",
-        "s12_crawler_parse", "s4_text_ip_worklist",
-        "s7_master_schema_rules", "s9_load_routing",
-        "scd4_current_history_pair", "setops_users_vs_customers",
-        "stream_static_enrich", "text_decontaminate",
-        "text_fingerprint", "text_language_id",
-        "text_pack_sequences", "text_pretraining_pipeline",
-        "text_quality_filter_stratified", "text_quality_score",
-        "text_repetition_filter", "text_shuffle_shards",
-        "text_split_assign", "text_token_stats", "text_vocab_topk",
-    }
-)
-
-
-# Driver-green in CORRECTNESS_r15.json (round-15 window, 50/50 green:
-# 2 code-moved rotate-first + the 5 _DEFER_FRESH_R15 first-grades +
-# 4 fresh r15 entries + the 13-entry r7-stale remainder + the first
-# 26 of the r8-stale cohort).
-_R15_GREEN = frozenset(
-    {
-        "graph_cc_incremental", "lake_mor_dense_deletes",
-        "stream_cdc_to_mor", "graph_cc_decremental",
-        "text_bm25_incremental", "lake_shallow_clone",
-        "emb_ivfpq_incremental", "lake_bloom_pruned_read",
-        "graph_triangles_incremental", "dedup_lsh_index_decremental",
-        "emb_ivf_decremental", "text_pii_scrub", "lake_merge_upsert",
-        "scd2_apply_changes", "scd2_apply_wide_dim",
-        "text_url_canonicalize", "dq_referential_integrity",
-        "j_asof_tolerance", "a_histogram_rollup_merge", "dq_outlier_mad",
-        "dedup_exact_spans", "emb_filtered_ann_topk", "w_gaps_islands",
-        "a_decimal_money_sum", "graph_pagerank", "dedup_minhash_lsh",
-        "dedup_simhash", "star_stg_summary", "star_dim_customer",
-        "star_dim_session_context", "star_date_range", "star_dim_date",
-        "star_dim_product", "star_dim_location", "star_fact_sales_order",
-        "stream_star_fact_incremental", "stream_tumbling_event_counts",
-        "stream_session_windows", "stream_sliding_window_counts",
-        "stream_dedup_replayed", "stream_interval_join_attribution",
-        "s5_s6_incremental_ingest", "s_csv_round_trip",
-        "s_schema_evolution", "s_partitioned_lake", "mm_extract_features",
-        "mm_feature_ann_topk", "mm_resize_images",
-        "mm_video_frame_sample", "lake_snapshot_read",
-    }
-)
-
-
-def _last_graded(name: str) -> int:
-    """Latest round whose driver window graded ``name`` green (0 =
-    never graded — fresh this round). Later rounds win: r5 re-graded
-    19 entries first greened in r2/r3."""
-    for rnd, green in (
-        (15, _R15_GREEN),
-        (14, _R14_GREEN),
-        (13, _R13_GREEN),
-        (12, _R12_GREEN),
-        (11, _R11_GREEN),
-        (10, _R10_GREEN),
-        (9, _R9_GREEN),
-        (8, _R8_GREEN),
-        (7, _R7_GREEN),
-        (6, _R6_GREEN),
-        (5, _R5_GREEN),
-        (4, _R4_GREEN),
-        (3, _R3_GREEN),
-        (2, _R2_GREEN),
-    ):
-        if name in green:
-            return rnd
-    return 0
-
-
-# ROUND-12 WINDOW FOLD (executed per the r11 plan): the 14 r11-deferred
-# and the first 18 of the 32 r12-deferred (registration order, augmented
-# so every code-touched entry of this round is included) fold into the
-# fresh block — 18 rotate-first + 32 fresh = exactly the 50-slot window.
-# The remaining 14 spill to _DEFER_FRESH_R13 below, together with the
-# seven entries newly added during round 12 (21 deferred total); all
-# were bare-oracle-green at sf0.01 this round.
-#
-# ROUND-13 WINDOW PLAN (executed): grade (1) entries whose code moves
-# in r13 — the 4 _ROTATE_FIRST_R13 names, (2) the 19 remaining
-# _DEFER_FRESH_R13 names (the only entries with zero driver grades),
-# (3) the 7 fresh r13 entries, (4) the r6-stale cohort oldest-first
-# with the 20 remaining slots. The full 50-entry window was bare-
-# oracle-green at sf0.01 this round before close.
-#
-# ROUND-14 WINDOW PLAN (executed): grade (1) the 5 code-moved
-# _ROTATE_FIRST_R14 entries, (2) the 3 fresh r14 entries
-# (emb_ivf_incremental_refresh, lake_merge_mor, graph_cc_incremental),
-# (3) the 18-entry r6-stale remainder (a_approx_sketches onward —
-# fully drained this round), (4) the first 24 of the 37-entry r7-stale
-# cohort. 5 + 3 + 18 + 24 = exactly the 50-slot window.
-#
-# ROUND-15 WINDOW PLAN (executed): grade (1) the 2 code-moved
-# _ROTATE_FIRST_R15 entries (graph_cc_incremental — falsifiable
-# contraction gate; lake_mor_dense_deletes — era-miss raise in
-# read_snapshot_mor), (2) the 5 _DEFER_FRESH_R15 first-grades, (3) the
-# 4 fresh r15 entries (lake_bloom_pruned_read,
-# graph_triangles_incremental, dedup_lsh_index_decremental,
-# emb_ivf_decremental), (4) the 13-entry r7-stale remainder, (5) the
-# first 26 of the 41-entry r8-stale cohort. 2+5+4+13+26 = exactly the
-# 50-slot window.
-#
-# ROUND-16 WINDOW PLAN: grade (1) entries whose code moves in r16,
-# (2) fresh r16 entries, (3) the 15-entry r8-stale remainder
-# (registration order after this round's 26-entry drain:
-# lake_compact_commit onward — _last_graded()==8 names outside the
-# r15 window), then (4) the r9-stale cohort oldest-first with
-# remaining slots (32 entries graded r9; expect ~25-28 slots if r16
-# adds the usual fresh entries and rotates 2-3). Update the green sets
-# from CORRECTNESS_r15 before reordering.
-_DEFER_FRESH_R13 = (
-    "text_kneser_ney_bigram",
-    "a_market_basket_rules",
-    "dq_cramers_v",
-    "j_dynamic_partition_pruning",
-    "w_sliding_distinct_users",
-    "stream_ivm_retractable_agg",
-    "j_aqe_skew_join_split",
-    "s_bucket_pruned_scan",
-    "scd2_late_arriving_splice",
-    "lake_zorder_prune_effectiveness",
-    "a_kaplan_meier_survival",
-    "a_pareto_concentration",
-    "dq_experiment_readout_panel",
-    "f_variant_semistructured",
-    # added during round 12 (after the window plan locked):
-    "graph_betweenness_capstone",
-    "f_variant_shredded_read",
-    "lake_deletion_vectors",
-    "scd4_current_history_pair",
-    "text_isotonic_calibration",
-    "graph_mst_boruvka",
-    "a_logistic_irls_glm",
-)
-
-
-# Round-13 front-loads: entries whose IMPLEMENTATION moved in round 13,
-# re-graded the round their code moves. j1_j5_star_join_defaults: the
-# last SF-proportional broadcast hint removed (the r12 verdict's single
-# weak — AQE/statistics now pick the join); lake_position_deletes +
-# lake_deletion_vectors: compact_to_deletion_vectors switched to the
-# tmp-write + checked-rename swap and read_mor became DV-aware (ADVICE
-# r12); scd4_current_history_pair: scd4_apply's swap renames are now
-# checked with entry-time .old recovery (ADVICE r12).
-_ROTATE_FIRST_R13 = (
-    "j1_j5_star_join_defaults",
-    "lake_position_deletes",
-    "lake_deletion_vectors",
-    "scd4_current_history_pair",
-)
-
-
-# Round-14 front-loads: entries whose IMPLEMENTATION moved in round 14,
-# re-graded the round their code moves. scd4_current_history_pair:
-# scd4_apply's history append is now staged through <history>.pending
-# + a _PENDING_HISTORY marker and folded exactly-once after the swap
-# (ADVICE r13); lake_dv_zorder_read + lake_stats_incremental_maintenance:
-# read_mor_dv_pruned diffs stats against the live data/ listing
-# (unprofiled files must-read, NULL bounds must-read, n_total = live
-# listing) and collect_file_stats(incremental=True) discovers files by
-# FileSystem listing instead of a footer-opening scan (ADVICE r13);
-# dedup_lsh_index_incremental: lifecycle job-budget trim (persisted
-# corpus shingles shared by build+verify, persisted index read-back,
-# persisted admit frame — r13 verdict task 4); emb_ivf_incremental:
-# the Lloyd-refresh arm moved into the shared _ivf_refresh_rebuild
-# helper (graded through the new emb_ivf_incremental_refresh).
-_ROTATE_FIRST_R14 = (
-    "scd4_current_history_pair",
-    "lake_dv_zorder_read",
-    "lake_stats_incremental_maintenance",
-    "dedup_lsh_index_incremental",
-    "emb_ivf_incremental",
-)
-
-
-# Entries added AFTER the round-14 window plan locked (5 rotate-first +
-# 3 fresh + 18 r6-stale + 24 r7-stale = exactly 50): they sorted to the
-# BACK of the round-14 registry so the staleness-drain cohort kept its
-# slots; round 15's `_last_graded() == 0` rule pulls them forward
-# automatically (the r11 deferral mechanism). All bare-oracle-green at
-# sf0.01 the round they were added; all graded FIRST in round 15 per
-# the written plan.
-_DEFER_FRESH_R15 = (
-    "stream_cdc_to_mor",
-    "graph_cc_decremental",
-    "text_bm25_incremental",
-    "lake_shallow_clone",
-    "emb_ivfpq_incremental",
-)
-
-
-# Round-15 front-loads: entries whose IMPLEMENTATION moved in round 15,
-# re-graded the round their code moves. graph_cc_incremental: the
-# vacuous contraction gate replaced with a falsifiable one (meta CC
-# node set == distinct batch endpoint labels — ADVICE r14).
-# lake_mor_dense_deletes: read_snapshot_mor now RAISES on a
-# manifest-eras normalization miss instead of silently falling back to
-# the path-derived era (ADVICE r14) — this entry is the densest
-# consumer of the era path (both WAP and plain eras under expiry), so
-# it re-grades the shared read-path change; lake_shallow_clone, the
-# other principal and the motivating consumer, is already in the
-# window as a first-grade.
-_ROTATE_FIRST_R15 = (
-    "graph_cc_incremental",
-    "lake_mor_dense_deletes",
-)
-
-
-# Entries added AFTER the round-15 window plan locked: sorted to the
-# BACK of the registry so the staleness drain keeps its slots; round
-# 16's `_last_graded() == 0` rule pulls them forward automatically.
-_DEFER_FRESH_R16: tuple[str, ...] = ()
-
-
-# Round-16 front-loads: entries whose IMPLEMENTATION moved in round 16
-# (the optimization round), re-graded the round their code moves.
-# Maintained incrementally as the round's optimizations land; every
-# name here was oracle-re-verified at sf0.01 the session its code
-# moved. graph_triangles_incremental: wedge-count local-path gate
-# (ADVICE r15 medium) + the distributed arm's degree aggregate hoisted;
-# graph_cc_incremental: _apply_edge_batch's dead gate_counts branch
-# dropped (ADVICE r15 low); graph_pointer_jump_roots +
-# graph_mst_boruvka: pointer_jump_roots gained the hybrid local
-# doubling twin (identical composition and round count; Borůvka's
-# per-round contraction rides it).
-# posdelete.py job-budget trims (persisted victims/source/vectors/
-# stats, footer-count in rewrite_compact) move code under every MoR
-# lifecycle entry; star_fact_sales_order_incremental: fused per-date
-# manifest aggregate + persisted events/slice.
-# duplicate_clusters gained the union-find hybrid under
-# _LOCAL_THRESHOLD (the LSH-bounded pair graph is the common case):
-# every retain/cluster consumer moves; emb_ivf_incremental(+refresh)
-# and the LSH index pair moved via their own lifecycle trims.
-_ROTATE_FIRST_R16 = (
-    "graph_triangles_incremental",
-    "graph_cc_incremental",
-    "graph_pointer_jump_roots",
-    "graph_mst_boruvka",
-    "star_fact_sales_order_incremental",
-    "lake_dv_zorder_read",
-    "lake_mor_rewrite_compaction",
-    "lake_stats_incremental_maintenance",
-    "lake_position_deletes",
-    "lake_deletion_vectors",
-    "lake_merge_mor",
-    "stream_cdc_to_mor",
-    "lake_bloom_pruned_read",
-    "emb_ivf_incremental",
-    "emb_ivf_incremental_refresh",
-    "dedup_lsh_index_incremental",
-    "dedup_lsh_index_decremental",
-    "dedup_clusters",
-    "dedup_retain_corpus",
-    "text_pretraining_pipeline",
-    "dedup_semantic_retain",
-    "emb_indexing_pipeline",
-    "graph_cc_decremental",
-)
-
-
-def _window_order() -> list[str]:
-    """Round-16 order, per the written plan above: (1) code-moved
-    entries (_ROTATE_FIRST_R16 — the optimization round's touched
-    entries), (2) never-graded entries in registration order (none
-    expected: optimization rounds add no features) EXCEPT the
-    _DEFER_FRESH_R16 late additions, (3) the staleness drain
-    (last-graded round ascending: the 15-entry r8 remainder leads,
-    then the r9 cohort oldest-first), (4) the deferred late additions,
-    at the very back — outside the driver's [:50] window. Whatever the
-    50-slot window cannot fit of (3) spills to round 17's drain."""
-    registered = list(QUERIES)
-    front = [n for n in _ROTATE_FIRST_R16 if n in QUERIES]
-    defer = [
-        n
-        for n in _DEFER_FRESH_R16
-        if n in QUERIES and _last_graded(n) == 0 and n not in front
-    ]
-    fresh = [
-        n
-        for n in registered
-        if _last_graded(n) == 0 and n not in front and n not in defer
-    ]
-    pos = {n: i for i, n in enumerate(registered)}
-    graded = sorted(
-        (
-            n
-            for n in registered
-            if _last_graded(n) > 0 and n not in front
-        ),
-        key=lambda n: (_last_graded(n), pos[n]),
-    )
-    return front + fresh + graded + defer
-
-
-def _apply_order() -> None:
-    order = _window_order()
-    q = {n: QUERIES[n] for n in order}
-    o = {n: ORACLES[n] for n in order if n in ORACLES}
-    QUERIES.clear()
-    QUERIES.update(q)
-    ORACLES.clear()
-    ORACLES.update(o)
-
-
-_apply_order()
 
 __all__ = ["ORACLES", "QUERIES"]

@@ -1,11 +1,6 @@
-"""Round-4 tail additions, registered AFTER every other module.
-
-Import order matters for the driver window (see plans/__init__.py):
-fresh entries are graded in registration order, and the round-4 window
-is already exactly full — entries here deliberately land at the END of
-the fresh list, outside the [:50] window, to be driver-graded in round
-5 (judge-verified via scripts/check_oracle.py until then). Anything
-that must be graded THIS round belongs in an earlier module.
+"""The frequent co-purchase part graph (``copurchase_edges``, shared by
+the graph entries of other modules), its triangle-count and
+link-prediction entries, and the end-to-end CDC apply entry.
 """
 
 from __future__ import annotations

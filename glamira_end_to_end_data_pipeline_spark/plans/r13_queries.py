@@ -397,6 +397,7 @@ def emb_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         tracked_persist,
     )
     from glamira_end_to_end_data_pipeline_spark.operators.similarity import (
+        _assign_cells,
         _pair_cosine,
         _side,
         ivf_cell_bulk,
@@ -416,9 +417,7 @@ def emb_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # initial build: assign + write the cell-partitioned layout
     cents = ivf_centroids(init, n_cells=8)
-    c_init = _side(
-        init, "vec_id", "embedding", "neighbor_id", "c_vec", "c_norm"
-    ).withColumn("cell", ivf_cell_bulk(F.col("c_vec"), F.col("c_norm"), cents))
+    c_init = _assign_cells(init, cents, "vec_id", "embedding")
     # partition-aligned write: one file per cell directory (32 tasks x
     # 8 cells would land 256 small files; every probe re-opens them)
     c_init.repartition("cell").write.partitionBy("cell").parquet(path)
@@ -427,9 +426,7 @@ def emb_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the new batch: no join (the centroids ride as literals) and
     # no scan of the index directory (the initial corpus is not
     # re-read). Both gated on the optimized plan.
-    c_app = _side(
-        append, "vec_id", "embedding", "neighbor_id", "c_vec", "c_norm"
-    ).withColumn("cell", ivf_cell_bulk(F.col("c_vec"), F.col("c_norm"), cents))
+    c_app = _assign_cells(append, cents, "vec_id", "embedding")
     # the plan gate runs BEFORE the persist below: a persisted frame's
     # optimized plan collapses to InMemoryRelation, which would hide
     # the join/scan shapes the gate exists to falsify

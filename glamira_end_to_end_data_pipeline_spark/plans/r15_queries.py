@@ -663,9 +663,9 @@ def _register_emb_ivf_decremental() -> None:
         compaction — cost ∝ affected cells, on an operator schedule,
         never per delete."""
         from glamira_end_to_end_data_pipeline_spark.operators.similarity import (
+            _assign_cells,
             _pair_cosine,
             _side,
-            ivf_cell_bulk,
             ivf_centroids,
             ivf_probe_cells,
         )
@@ -697,11 +697,7 @@ def _register_emb_ivf_decremental() -> None:
         # BUILD: frozen quantizer, cell-partitioned layout (one file
         # per cell directory — the emb_ivf_incremental write shape)
         cents = ivf_centroids(corpus, n_cells=8)
-        c_all = _side(
-            corpus, "vec_id", "embedding", "neighbor_id", "c_vec", "c_norm"
-        ).withColumn(
-            "cell", ivf_cell_bulk(F.col("c_vec"), F.col("c_norm"), cents)
-        )
+        c_all = _assign_cells(corpus, cents, "vec_id", "embedding")
         c_all.repartition("cell").write.partitionBy("cell").parquet(layout)
 
         # DELETE -> tombstone sidecar: the ONLY write; survival gated

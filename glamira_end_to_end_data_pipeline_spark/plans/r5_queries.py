@@ -697,9 +697,9 @@ def emb_ivf_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
 
     from glamira_end_to_end_data_pipeline_spark.operators.similarity import (
+        _assign_cells,
         _pair_cosine,
         _side,
-        ivf_cell_bulk,
         ivf_centroids,
         ivf_probe_cells,
     )
@@ -708,10 +708,9 @@ def emb_ivf_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_raw = emb.filter(F.col("vec_id") < 10)
     c_raw = emb.filter(F.col("vec_id") >= 10)
     cents = ivf_centroids(c_raw, n_cells=8)
-    c = _side(c_raw, "vec_id", "embedding", "neighbor_id", "c_vec", "c_norm")
-    c.withColumn(
-        "cell", ivf_cell_bulk(F.col("c_vec"), F.col("c_norm"), cents)
-    ).write.partitionBy("cell").parquet(path)
+    _assign_cells(c_raw, cents, "vec_id", "embedding").write.partitionBy(
+        "cell"
+    ).parquet(path)
 
     qs = _side(
         q_raw, "vec_id", "embedding", "query_id", "q_vec", "q_norm"

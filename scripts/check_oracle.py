@@ -1,16 +1,19 @@
 """Self-check harness mimicking the driver's t2 correctness gate.
 
-Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+Usage: python scripts/check_oracle.py [sf_dir] [query ...] [--bare]
+
+An unknown query name is an error: the run exits 2 before Spark starts.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 from glamira_end_to_end_data_pipeline_spark import get_spark  # noqa: E402
@@ -26,6 +29,11 @@ def main() -> int:
     bare = "--bare" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    qs, os_ = queries(), oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown entries: {unknown}", file=sys.stderr)
+        return 2
 
     if bare:
         # Mimic the driver harness: a plain SparkSession with NONE of our
@@ -44,7 +52,6 @@ def main() -> int:
     con = duckdb.connect()
     register_duckdb_views(con, sf_dir)
 
-    qs, os_ = queries(), oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

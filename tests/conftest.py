@@ -1,11 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from glamira_end_to_end_data_pipeline_spark import get_spark
 from glamira_end_to_end_data_pipeline_spark.testing import register_duckdb_views

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import importlib.util
+import os
+import sys
+
 import pytest
 
 from __spark_entry__ import entry, oracle_sql, queries
@@ -31,6 +35,33 @@ def test_every_query_has_oracle_or_is_declared():
     # every oracle-less query must be deliberate (documented non-SQL ops)
     for name in set(qs) - set(os_):
         assert qs[name].__doc__ and "no oracle" in qs[name].__doc__.lower(), name
+
+
+def test_registry_is_in_registration_order():
+    """Both dicts iterate in registration order: the first module
+    imported by ``plans`` registers the flagship first, and the oracle
+    dict follows the query dict's order."""
+    qs, os_ = queries(), oracle_sql()
+    assert list(qs)[0] == "flagship_daily_events"
+    assert list(os_) == [n for n in qs if n in os_]
+
+
+def test_check_oracle_rejects_unknown_names(monkeypatch, capsys):
+    """A misspelled entry name fails the self-check before any Spark
+    work instead of being skipped into a clean ``0 failures`` run."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "check_oracle.py",
+    )
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    check_oracle = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check_oracle)
+    argv = ["check_oracle.py", SF_SMALL, "flagship_daily_events", "no_such_entry"]
+    monkeypatch.setattr(sys, "argv", argv)
+    assert check_oracle.main() == 2
+    err = capsys.readouterr().err
+    assert "no_such_entry" in err and "flagship_daily_events" not in err
 
 
 @pytest.mark.parametrize("name", sorted(oracle_sql()))
