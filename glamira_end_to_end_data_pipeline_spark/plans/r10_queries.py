@@ -169,10 +169,10 @@ def lake_mor_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule — a delete hits only data files committed strictly BEFORE it,
     so the era-4 re-inserts survive while both earlier eras' deleted
     keys vanish — with one broadcast join against the max-version-per-
-    key delete set; eras come from the manifest's recorded per-file
-    map (path-parse fallback for legacy manifests — see r11's
-    ``lake_mor_dense_deletes`` for the WAP-published era path). The
-    oracle derives the same final state from the source table."""
+    key delete set; eras come only from the manifest's recorded
+    per-file map (see r11's ``lake_mor_dense_deletes`` for WAP-published
+    files). The oracle derives the same final state from the source
+    table."""
     import os
     import shutil
     import tempfile

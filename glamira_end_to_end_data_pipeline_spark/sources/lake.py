@@ -398,35 +398,42 @@ def _read_manifest(spark: SparkSession, path: str, version: int) -> list[str]:
 EVER_CHECKPOINT_EVERY = 16
 
 
-def _cumulative_ever(spark: SparkSession, path: str, version: int) -> list[str]:
+def _cumulative_ever(
+    spark: SparkSession, path: str, version: int, head_doc: dict | None = None
+) -> list[str]:
     """Every file visible in ANY version ≤ ``version``: walk back to
     the nearest manifest carrying a full ``ever`` checkpoint (≤
-    ``EVER_CHECKPOINT_EVERY`` reads), then fold the ``ever_delta``
-    lists above it forward. Three manifest generations compose:
-    checkpoint+delta (current), full-``ever``-every-version (previous),
-    and legacy docs with neither — the last fall back to a full
-    ``files`` walk of their prefix."""
+    ``EVER_CHECKPOINT_EVERY`` reads; v1 always carries one), then fold
+    the ``ever_delta`` lists above it forward. ``head_doc``, when it is
+    the manifest AT ``version``, is used instead of re-reading it."""
     deltas: list[list[str]] = []
-    v = version
-    while v >= 1:
-        doc = _read_manifest_doc(spark, path, v)
+    for v in range(version, 0, -1):
+        if head_doc is not None and head_doc["version"] == v:
+            doc = head_doc
+        else:
+            doc = _read_manifest_doc(spark, path, v)
         if "ever" in doc:
             ever = set(doc["ever"])
             break
-        if "ever_delta" in doc:
-            deltas.append(doc["ever_delta"])
-            v -= 1
-            continue
-        # legacy prefix: no cumulative bookkeeping at or below v
-        ever = set()
-        for w in range(1, v + 1):
-            ever.update(_read_manifest(spark, path, w))
-        break
+        deltas.append(doc["ever_delta"])
     else:
         ever = set()
     for d in deltas:
         ever.update(d)
     return sorted(ever)
+
+
+def _eras(doc: dict) -> list[int]:
+    """The manifest's per-file commit ERAS (Iceberg's data sequence
+    numbers), parallel to ``files`` — the only record of when each file
+    entered the table."""
+    eras = doc["eras"]
+    if len(eras) != len(doc["files"]):
+        raise ValueError(
+            f"manifest v{doc.get('version')}: {len(eras)} eras for "
+            f"{len(doc['files'])} files — the eras list must parallel files"
+        )
+    return eras
 
 
 def latest_snapshot_version(spark: SparkSession, path: str) -> int:
@@ -485,8 +492,9 @@ def write_snapshot(
     crash mid-commit leaves orphaned data files (harmless, GC-able by
     diffing data dirs against manifests) but never a manifest pointing
     at missing data, and never a torn manifest. Concurrent writers
-    would race on the version number — serialize commits (or add a
-    conditional-put/lock service) exactly as Delta/Iceberg do.
+    race on the version number: the rename refuses an existing
+    manifest, so the loser raises :class:`CommitConflictError` (use
+    :func:`write_snapshot_cas` to retry against the new head).
 
     ``tag`` is an optional idempotence token recorded in the manifest
     (e.g. a streaming micro-batch id): writers that may replay a commit
@@ -528,24 +536,15 @@ def write_snapshot(
     new_files = _write_version_data(
         spark, df, path, version, partition_by=partition_by
     )
-    prev_files: list[str] = []
-    prev_stats: dict = {}
-    if version > 1 and not replace:
-        prev_doc = _read_manifest_doc(spark, path, version - 1)
-        prev_files = prev_doc["files"]
-        prev_stats = prev_doc.get("stats", {})
-    files = prev_files + new_files
-    stats = dict(prev_stats)
-    if stats_cols:
-        stats.update(_file_stats(spark, new_files, stats_cols))
     _commit_manifest(
         spark,
         path,
         version,
-        files,
+        new_files,
+        None if replace else _parent_doc(spark, path, version),
         tag,
         operation="replace" if replace else "append",
-        stats=stats or None,
+        new_stats=_file_stats(spark, new_files, stats_cols) if stats_cols else None,
         spec=partition_by,
     )
     return version
@@ -579,14 +578,14 @@ def write_snapshot_cas(
     files OPTIMISTICALLY into the target version's immutable dir —
     part-file names are unique, so a losing writer's files coexist as
     orphans beside the winner's and the next :func:`gc_orphan_files`
-    reclaims them; (2) validate the head; (3) publish the manifest
-    with a no-overwrite guard. On stores with atomic no-overwrite
-    rename / conditional put (HDFS, S3 if-none-match, GCS
-    generation-match) step 3 IS the arbiter; the local dev filesystem's
-    POSIX rename overwrites, so there the exists-check before the
-    rename narrows, not closes, the race window — the sandbox is
-    single-process, and a production deployment points the manifest
-    dir at a store with a real conditional put (noted, not hidden).
+    reclaims them; (2) validate the head; (3) publish the manifest by
+    renaming this attempt's own temp file onto ``v{N}.json``. Hadoop's
+    ``FileSystem.rename`` refuses an existing destination (HDFS and the
+    local filesystem both return false and leave it unchanged; object
+    stores give the same guard as S3 if-none-match / GCS
+    generation-match puts), so step 3 IS the arbiter: of the writers
+    racing for version N exactly one publishes, and every other one gets
+    :class:`CommitConflictError` with the winner's manifest untouched.
 
     Returns the committed version; raises CommitConflictError on any
     detected interleaved commit (the caller retries against the new
@@ -599,18 +598,10 @@ def write_snapshot_cas(
     # the directory name is free): two racing writers can never
     # overwrite each other's files, the loser's whole dir is an
     # unreferenced orphan GC removes, and the winner's files live at
-    # this name forever. The per-file era comes from the manifest's
-    # recorded ``eras`` (path parsing is only a legacy-manifest
-    # fallback, and no legacy manifest can reference a CAS dir).
+    # this name forever. Their era is the one the manifest records.
     token = uuid.uuid4().hex[:8]
     data_dir = f"{path.rstrip('/')}/data/vcas_{version}_{token}"
     new_files = _write_data_dir(spark, df, data_dir)
-    prev_files: list[str] = []
-    prev_stats: dict = {}
-    if expected_version >= 1:
-        prev_doc = _read_manifest_doc(spark, path, expected_version)
-        prev_files = prev_doc["files"]
-        prev_stats = prev_doc.get("stats", {})
     head = latest_snapshot_version(spark, path)
     if head != expected_version:
         raise CommitConflictError(
@@ -618,25 +609,14 @@ def write_snapshot_cas(
             f"retry against the new head (this attempt's data files are "
             f"orphans until GC)"
         )
-    stats = dict(prev_stats)
-    if stats_cols:
-        stats.update(_file_stats(spark, new_files, stats_cols))
-    fs, _ = _hadoop_fs(spark, path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    final = jvm_path(f"{_manifest_dir(path)}/v{version}.json")
-    if fs.exists(final):
-        raise CommitConflictError(
-            f"v{version} was committed by another writer during this "
-            f"attempt — retry against the new head"
-        )
     _commit_manifest(
         spark,
         path,
         version,
-        prev_files + new_files,
+        new_files,
+        _parent_doc(spark, path, version),
         tag,
-        operation="append",
-        stats=stats or None,
+        new_stats=_file_stats(spark, new_files, stats_cols) if stats_cols else None,
     )
     return version
 
@@ -651,23 +631,6 @@ def _norm_uri(uri: str) -> str:
     elif ":" in uri.split("/", 1)[0]:
         uri = uri.split(":", 1)[1]
     return "/" + uri.lstrip("/")
-
-
-def _path_era(f: str) -> int | None:
-    """Commit version inferred from a data file's immutable directory:
-    ``/data/v<N>/`` files committed at N; ``/data/vb_<branch>_<base>/``
-    files were STAGED against base and published as base+1 (enforced —
-    publish_branch refuses any other head). None for unrecognized
-    layouts (callers must treat that as era-unknown, never as 0)."""
-    import re
-
-    m = re.search(r"/data/v(\d+)/", f)
-    if m:
-        return int(m.group(1))
-    m = re.search(r"/data/vb_.+_(\d+)/", f)
-    if m:
-        return int(m.group(1)) + 1
-    return None
 
 
 def _file_stats(
@@ -941,21 +904,34 @@ def _write_data_dir(
     return sorted(files)
 
 
+def _parent_doc(spark: SparkSession, path: str, version: int) -> dict | None:
+    """The manifest ``version`` commits on top of (None for v1)."""
+    return _read_manifest_doc(spark, path, version - 1) if version > 1 else None
+
+
 def _commit_manifest(
     spark: SparkSession,
     path: str,
     version: int,
-    files: list[str],
+    new_files: list[str],
+    kept: dict | None = None,
     tag: str | None = None,
     operation: str = "append",
-    stats: dict | None = None,
+    new_stats: dict | None = None,
     spec: list[str] | None = None,
     delete_files: list[str] | None = None,
     carried_deletes: list[dict] | None = None,
     delete_checkpoint: bool = False,
-    eras_override: list[int] | None = None,
 ) -> None:
     """Atomically publish a version's manifest (temp write + rename).
+
+    The version lists ``kept``'s files (a manifest doc — the parent for
+    appends and deletes, the target for a rollback, the remapped source
+    for a clone) followed by ``new_files``, the files this commit wrote.
+    Per-file ERAS, parallel to ``files``, are decided here and nowhere
+    else: kept files keep the era ``kept`` records, new files take
+    ``version``. Column stats likewise: ``kept``'s carry forward, and
+    ``new_stats`` adds the new files'.
 
     ``operation`` records HOW this version came to be — ``append`` (new
     rows) vs ``rewrite`` (same rows, new files: compaction) — exactly
@@ -966,49 +942,24 @@ def _commit_manifest(
     visible in ANY version ≤ this one, CHECKPOINTED: versions 1,
     ``EVER_CHECKPOINT_EVERY``, 2·``EVER_CHECKPOINT_EVERY``, … store
     the full sorted ``ever`` list; every other version stores only
-    ``ever_delta`` (this version's genuinely-new file names). A reader
+    ``ever_delta`` (the files whose era is this version). A reader
     seeding at version V reconstructs the set with a BOUNDED walk —
     nearest checkpoint at-or-below V plus the deltas above it, ≤
     ``EVER_CHECKPOINT_EVERY`` manifest reads — so total manifest
     storage over a table's life is O(V) (full lists only every Nth
     version) instead of the O(V²) a full-list-every-version scheme
     accumulates, and a version-tailing consumer still never re-walks
-    the whole history."""
-    import json
+    the whole history. Only a checkpoint version walks (starting from
+    ``kept`` when it is the parent); any other commit reads no manifest.
 
-    prev_ever: set[str] = (
-        set(_cumulative_ever(spark, path, version - 1)) if version > 1 else set()
-    )
-    # Per-file commit ERAS (Iceberg's data sequence numbers), recorded
-    # at commit time as a list parallel to ``files``: retained files
-    # inherit the previous manifest's era, new files get their path's
-    # version (covers both /data/v<N>/ appends and published WAP-branch
-    # dirs, whose files live at /data/vb_<branch>_<base>/ FOREVER —
-    # path-only parsing gave those a NULL era, which made the MoR
-    # survivor filter drop every re-inserted row whose key had any
-    # older delete). read_snapshot_mor consults this map first and
-    # falls back to path parsing only for legacy manifests.
-    prev_eras: dict[str, int] = {}
-    if version > 1:
-        try:
-            pd = _read_manifest_doc(spark, path, version - 1)
-            prev_eras = dict(zip(pd.get("files", []), pd.get("eras", [])))
-        except FileNotFoundError:
-            pass
-    if eras_override is not None:
-        # the caller carries authoritative eras (shallow_clone's
-        # remapped source timeline) — parallel to ``files`` by contract
-        if len(eras_override) != len(files):
-            raise ValueError("eras_override must parallel files")
-        eras = [int(e) for e in eras_override]
-    else:
-        eras = []
-        for f in files:
-            if f in prev_eras:
-                eras.append(int(prev_eras[f]))
-            else:
-                pe = _path_era(f)
-                eras.append(pe if pe is not None else version)
+    Each attempt writes its own temp file and renames it onto
+    ``v{version}.json``; a refused rename means another writer published
+    the version first, which raises :class:`CommitConflictError`."""
+    import json
+    import uuid
+
+    files = (kept["files"] if kept else []) + new_files
+    eras = (_eras(kept) if kept else []) + [version] * len(new_files)
     doc = {
         "version": version,
         "files": files,
@@ -1016,11 +967,16 @@ def _commit_manifest(
         "operation": operation,
     }
     if version == 1 or version % EVER_CHECKPOINT_EVERY == 0:
-        doc["ever"] = sorted(prev_ever | set(files))
+        prev_ever = _cumulative_ever(spark, path, version - 1, kept)
+        doc["ever"] = sorted(set(prev_ever) | set(files))
     else:
-        doc["ever_delta"] = sorted(set(files) - prev_ever)
+        doc["ever_delta"] = sorted(
+            f for f, era in zip(files, eras) if era == version
+        )
     if tag is not None:
         doc["tag"] = tag
+    stats = dict(kept.get("stats", {})) if kept else {}
+    stats.update(new_stats or {})
     if stats:
         doc["stats"] = stats
     if spec:
@@ -1048,14 +1004,23 @@ def _commit_manifest(
     mdir = jvm_path(_manifest_dir(path))
     if not fs.exists(mdir):
         fs.mkdirs(mdir)
-    tmp = jvm_path(f"{_manifest_dir(path)}/.v{version}.json.tmp")
-    out = fs.create(tmp, True)
+    # a temp name per ATTEMPT: a racing writer of the same version can
+    # never truncate this one's document before its rename
+    token = uuid.uuid4().hex[:8]
+    tmp = jvm_path(f"{_manifest_dir(path)}/.v{version}.json.{token}.tmp")
+    out = fs.create(tmp, False)
     try:
         out.write(payload)
     finally:
         out.close()
     final = jvm_path(f"{_manifest_dir(path)}/v{version}.json")
     if not fs.rename(tmp, final):
+        fs.delete(tmp, False)
+        if fs.exists(final):
+            raise CommitConflictError(
+                f"v{version} was committed by another writer during this "
+                f"attempt — retry against the new head"
+            )
         raise IOError(f"could not commit manifest for v{version} under {path}")
 
 
@@ -1102,7 +1067,9 @@ def compact_snapshot(
     prev_stats = prev_doc.get("stats", {})
     stat_cols = sorted({c for st in prev_stats.values() for c in st})
     stats = _file_stats(spark, files, stat_cols) if stat_cols else None
-    _commit_manifest(spark, path, version, files, operation="rewrite", stats=stats)
+    _commit_manifest(
+        spark, path, version, files, operation="rewrite", new_stats=stats
+    )
     return version, len(files)
 
 
@@ -1116,17 +1083,13 @@ def rollback_snapshot(spark: SparkSession, path: str, to_version: int) -> int:
     commit. Incremental (CDC) readers SKIP rollback commits exactly
     like rewrites (no new data rows exist; the reinstated files were
     already delivered when first committed — re-delivering them would
-    double-count). Returns the new version number."""
+    double-count). The reinstated files keep the eras the target
+    records, so equality deletes committed after the target still
+    apply to them under the merge-on-read sequence rule. Returns the
+    new version number."""
     target = _read_manifest_doc(spark, path, to_version)
     version = latest_snapshot_version(spark, path) + 1
-    _commit_manifest(
-        spark,
-        path,
-        version,
-        target["files"],
-        operation="rollback",
-        stats=target.get("stats"),
-    )
+    _commit_manifest(spark, path, version, [], target, operation="rollback")
     return version
 
 
@@ -1210,15 +1173,12 @@ def read_incremental(
     # would double-count. Commit-time bookkeeping (checkpointed
     # ``ever`` + per-version ``ever_delta``) makes seeding a BOUNDED
     # walk — at most EVER_CHECKPOINT_EVERY manifest reads regardless
-    # of table age — while total manifest storage stays O(V). Legacy
-    # manifests without either field fall back to the full walk.
-    seen: set[str] = set()
-    if from_version >= 1:
-        seen = set(_cumulative_ever(spark, path, from_version))
+    # of table age — while total manifest storage stays O(V).
+    seen = set(_cumulative_ever(spark, path, from_version))
     for v in range(from_version + 1, to_version + 1):
         doc = _read_manifest_doc(spark, path, v)
         files = doc["files"]
-        if doc.get("operation", "append") != "rewrite":
+        if doc["operation"] != "rewrite":
             delta.extend(f for f in files if f not in seen)
         # ``seen`` is MONOTONE — the union of every file observed in
         # the walk, never reset to a version's file list: a rollback
@@ -1386,7 +1346,7 @@ def expire_snapshots(
     doc = _read_manifest_doc(spark, path, cutoff)
     changed = False
     if "ever" not in doc:
-        doc["ever"] = _cumulative_ever(spark, path, cutoff)
+        doc["ever"] = _cumulative_ever(spark, path, cutoff, doc)
         doc.pop("ever_delta", None)
         changed = True
     carried = list(doc.get("carried_deletes", []))
@@ -1458,11 +1418,13 @@ def expire_snapshots(
 # the bounded key set). Sequencing follows Iceberg's sequence-number
 # rule: an equality delete applies to rows whose data file was
 # committed STRICTLY BEFORE the delete, so a key re-inserted after the
-# delete survives. The data file's commit version (its ERA — recorded
-# per file in the manifest at commit time, with the immutable
-# /data/v<N>/ or /data/vb_<branch>_<base>/ path as legacy fallback) is
-# the sequence number. Compaction back to copy-on-write is a normal
-# `rewrite` commit of the MoR read.
+# delete survives. The sequence number is the data file's ERA: the
+# version at which the file entered the table, recorded per file in
+# every manifest by _commit_manifest and carried unchanged by appends,
+# deletes, rollbacks and clones. A file's path says nothing about its
+# era (WAP-branch, CAS and cloned files live outside /data/v<N>/).
+# Compaction back to copy-on-write is a normal `rewrite` commit of the
+# MoR read.
 
 
 def _collect_deletes(
@@ -1549,9 +1511,9 @@ def rewrite_manifests(spark: SparkSession, path: str) -> dict:
         spark,
         path,
         version,
-        doc["files"],
+        [],
+        doc,
         operation="rewrite-manifests",
-        stats=doc.get("stats"),
         spec=doc.get("spec"),
         carried_deletes=carried_docs,
         delete_checkpoint=True,
@@ -1600,11 +1562,7 @@ def shallow_clone(
     if version is None:
         version = latest_snapshot_version(spark, src_path)
     doc = _read_manifest_doc(spark, src_path, version)
-    files = doc["files"]
-    eras = doc.get("eras") or [
-        (_path_era(f) if _path_era(f) is not None else version)
-        for f in files
-    ]
+    eras = _eras(doc)
     dels, _walked = _collect_deletes(spark, src_path, version, head_doc=doc)
     points = sorted({int(e) for e in eras} | {int(v) for v, _ in dels})
     remap = {p: i + 2 - len(points) for i, p in enumerate(points)}
@@ -1616,13 +1574,12 @@ def shallow_clone(
         spark,
         clone_path,
         1,
-        files,
+        [],
+        dict(doc, eras=[remap[int(e)] for e in eras]),
         operation="clone",
-        stats=doc.get("stats"),
         spec=doc.get("spec"),
         carried_deletes=carried or None,
         delete_checkpoint=True,
-        eras_override=[remap[int(e)] for e in eras],
     )
     return 1
 
@@ -1646,14 +1603,13 @@ def delete_snapshot(
     del_files = _write_version_data(
         spark, keys_df.select(*key_cols).distinct(), path, version
     )
-    prev_doc = _read_manifest_doc(spark, path, version - 1)
     _commit_manifest(
         spark,
         path,
         version,
-        prev_doc["files"],
+        [],
+        _parent_doc(spark, path, version),
         operation="delete",
-        stats=prev_doc.get("stats"),
         delete_files=del_files,
     )
     return version
@@ -1668,8 +1624,7 @@ def read_snapshot_mor(
     committed strictly before it — later re-inserts of the same key
     survive). Plan shape: ONE scan of the listed files tagged with
     their commit version (a bounded broadcast of the manifest's
-    per-file era map keyed on ``input_file_name``, with a map-side
-    path-regexp fallback for legacy manifests), the delete
+    per-file era map keyed on ``input_file_name``), the delete
     keys reduced to ``max(delete_version)`` per key (bounded: delete
     files hold keys, not rows) and BROADCAST into a left join; rows
     survive unless a delete outranks their file's version. Zero data
@@ -1679,65 +1634,43 @@ def read_snapshot_mor(
         version = latest_snapshot_version(spark, path)
     doc = _read_manifest_doc(spark, path, version)
     files = doc["files"]
+    eras = _eras(doc)
     dels, _walked = _collect_deletes(spark, path, version, head_doc=doc)
-    # Era per row = era of its data FILE. Primary source: the manifest's
-    # recorded eras (parallel to ``files``; see _commit_manifest), keyed
-    # through the scheme-normalized file name — the only source that is
-    # correct for WAP-published files, which live under
-    # /data/vb_<branch>_<base>/ forever (publish is metadata-only).
-    # Fallback for legacy manifests and normalization misses: parse the
-    # immutable directory name, INCLUDING the vb_ rule (base+1 — the
-    # version publish_branch is guaranteed to commit as). The old
-    # vN-only regexp left branch files with a NULL era, and
-    # ``__dv <= NULL`` silently dropped every re-inserted row whose key
-    # carried any older delete.
-    num = F.regexp_extract(F.input_file_name(), r"/data/v(\d+)/", 1)
-    vb = F.regexp_extract(F.input_file_name(), r"/data/vb_.+_(\d+)/", 1)
-    path_era = F.when(num != "", num.cast("long")).otherwise(
-        F.when(vb != "", vb.cast("long") + F.lit(1))
-    )
-    eras_list = doc.get("eras")
     base = spark.read.parquet(*files)
-    if eras_list and len(eras_list) == len(files):
-        era_df = local_frame(
-            spark,
-            [(_norm_uri(f), int(e)) for f, e in zip(files, eras_list)],
-            "__fn string, __mf_era long",
-        )
-        norm_col = F.regexp_replace(
-            F.input_file_name(), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/*", "/"
-        )
-        # When the manifest CARRIES an eras list it is authoritative for
-        # every listed file — a normalization miss must surface, not
-        # silently coalesce to the path-derived era (for a shallow
-        # clone the path era is the SOURCE's unremapped version number,
-        # which can let a carried delete spare rows it should kill —
-        # ADVICE r14). The path_era fallback remains only for legacy
-        # manifests with no eras list (the else branch below).
-        base = (
-            base.withColumn("__fn", norm_col)
-            .join(F.broadcast(era_df), "__fn", "left")
-            .withColumn(
-                "__era",
-                F.when(
-                    F.col("__mf_era").isNull(),
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "manifest eras list does not key file "
-                                "(normalization miss): "
-                            ),
-                            F.input_file_name(),
-                        )
-                    ),
-                ).otherwise(F.col("__mf_era")),
-            )
-            .drop("__fn", "__mf_era")
-        )
-    else:
-        base = base.withColumn("__era", path_era)
     if not dels:
-        return base.drop("__era")
+        return base
+    # Era per row = the era the manifest records for its data FILE,
+    # keyed through the scheme-normalized file name. The map is
+    # authoritative for every listed file: a normalization miss raises
+    # rather than guess an era.
+    era_df = local_frame(
+        spark,
+        [(_norm_uri(f), int(e)) for f, e in zip(files, eras)],
+        "__fn string, __mf_era long",
+    )
+    norm_col = F.regexp_replace(
+        F.input_file_name(), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/*", "/"
+    )
+    base = (
+        base.withColumn("__fn", norm_col)
+        .join(F.broadcast(era_df), "__fn", "left")
+        .withColumn(
+            "__era",
+            F.when(
+                F.col("__mf_era").isNull(),
+                F.raise_error(
+                    F.concat(
+                        F.lit(
+                            "manifest eras list does not key file "
+                            "(normalization miss): "
+                        ),
+                        F.input_file_name(),
+                    )
+                ),
+            ).otherwise(F.col("__mf_era")),
+        )
+        .drop("__fn", "__mf_era")
+    )
     key_cols = None
     parts = []
     for dv, dfiles in dels:
@@ -1965,22 +1898,14 @@ def publish_branch(spark: SparkSession, path: str, branch: str) -> int:
             f"branch {branch!r} staged against v{doc['base_version']} but "
             f"main is at v{head} — re-stage (concurrent commit detected)"
         )
-    prev_files: list[str] = []
-    prev_stats: dict = {}
-    if head > 0:
-        prev_doc = _read_manifest_doc(spark, path, head)
-        prev_files = prev_doc["files"]
-        prev_stats = prev_doc.get("stats", {})
-    stats = dict(prev_stats)
-    stats.update(doc.get("stats", {}))
     _commit_manifest(
         spark,
         path,
         head + 1,
-        prev_files + doc["files"],
+        doc["files"],
+        _parent_doc(spark, path, head + 1),
         tag=f"wap:{branch}",
-        operation="append",
-        stats=stats or None,
+        new_stats=doc.get("stats"),
     )
     drop_branch(spark, path, branch)
     return head + 1

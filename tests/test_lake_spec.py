@@ -323,28 +323,6 @@ def test_mor_wap_reinsert_survives_earlier_delete(spark, tmp_path):
     assert got2 == [(1, "a"), (2, "reborn")]
 
 
-def test_mor_wap_reinsert_legacy_manifest_path_fallback(spark, tmp_path):
-    # Tables committed before eras were recorded rely on the path
-    # fallback — which must understand the vb_<branch>_<base> layout
-    # (era = base + 1, the version publish is guaranteed to commit as).
-    path = str(tmp_path / "morlegacy")
-    lake.write_snapshot(
-        spark, spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), path
-    )
-    lake.delete_snapshot(spark, spark.createDataFrame([(2,)], "k int"), path, ["k"])
-    lake.stage_branch(
-        spark, spark.createDataFrame([(2, "reborn")], "k int, v string"), path, "inc"
-    )
-    lake.publish_branch(spark, path, "inc")
-    # strip the recorded eras to simulate a legacy manifest
-    for v in (1, 2, 3):
-        doc = lake._read_manifest_doc(spark, path, v)
-        doc.pop("eras", None)
-        lake._rewrite_json_atomic(spark, f"{path}/_manifests/v{v}.json", doc)
-    got = sorted((r.k, r.v) for r in lake.read_snapshot_mor(spark, path).collect())
-    assert got == [(1, "a"), (2, "reborn")]
-
-
 def test_mor_wap_reinsert_survives_expiry_between_deletes(spark, tmp_path):
     # Interleaved delete / WAP re-insert / second delete / expiry:
     # carried-forward deletes keep their original eras and the branch
@@ -465,8 +443,8 @@ def test_stats_pruned_bool_probe(spark, tmp_path):
 
 def test_rollback_preserves_original_eras_under_mor(spark, tmp_path):
     # Rollback reinstates the TARGET's files at a new head, but each
-    # file keeps its ORIGINAL era (inherited from the manifest map, or
-    # path-parsed identically) — so equality deletes committed between
+    # file keeps its ORIGINAL era (the one the target's manifest
+    # records) — so equality deletes committed between
     # the target and the rollback still apply to the reinstated rows.
     # History is preserved, not rewritten: Iceberg-style rollback here
     # is a new commit, and the delete remains part of the lineage.
@@ -484,9 +462,49 @@ def test_rollback_preserves_original_eras_under_mor(spark, tmp_path):
     assert got == [1, 3]
 
 
-def test_mor_era_fallback_when_eras_malformed(spark, tmp_path):
-    # A manifest whose eras list doesn't align with files (hand-edited,
-    # partial migration) must degrade to path parsing, never misalign.
+def test_rollback_keeps_cas_eras_under_mor(spark, tmp_path):
+    # CAS files live under /data/vcas_<N>_<token>/, which names no era.
+    # Rolling back past a compaction reinstates them from the target's
+    # manifest, eras included: the delete of k=2 at v2 still applies.
+    path = str(tmp_path / "rbcas")
+    lake.write_snapshot_cas(
+        spark, spark.createDataFrame([(1,), (2,)], "k int"), path, expected_version=0
+    )  # v1
+    lake.delete_snapshot(spark, spark.createDataFrame([(2,)], "k int"), path, ["k"])  # v2
+    assert _mor_keys(spark, path, 2) == [1]
+    lake.compact_snapshot(spark, path)  # v3
+    v4 = lake.rollback_snapshot(spark, path, 2)
+    assert v4 == 4
+    assert _mor_keys(spark, path) == [1]
+    assert lake._read_manifest_doc(spark, path, 4)["eras"] == (
+        lake._read_manifest_doc(spark, path, 2)["eras"]
+    )
+
+
+def test_rollback_of_shallow_clone_keeps_remapped_eras(spark, tmp_path):
+    # A clone's files sit in the SOURCE's version dirs, whose numbers
+    # are not the clone's eras (shallow_clone remaps them to <= 1).
+    # Rolling the clone back past a compaction must reinstate the
+    # remapped eras, so the carried delete of k=1 still applies.
+    src = str(tmp_path / "rbsrc")
+    clone = str(tmp_path / "rbclone")
+    lake.write_snapshot(spark, spark.createDataFrame([(1,), (2,)], "k int"), src)  # v1
+    lake.write_snapshot(spark, spark.createDataFrame([(3,)], "k int"), src)  # v2
+    lake.delete_snapshot(spark, spark.createDataFrame([(1,)], "k int"), src, ["k"])  # v3
+    lake.shallow_clone(spark, src, clone)  # clone v1
+    assert _mor_keys(spark, clone, 1) == [2, 3]
+    lake.compact_snapshot(spark, clone)  # clone v2
+    lake.rollback_snapshot(spark, clone, 1)  # clone v3
+    assert _mor_keys(spark, clone) == [2, 3]
+    assert lake._read_manifest_doc(spark, clone, 3)["eras"] == (
+        lake._read_manifest_doc(spark, clone, 1)["eras"]
+    )
+
+
+def test_misaligned_eras_raise(spark, tmp_path):
+    # A manifest whose eras list doesn't parallel files (hand-edited,
+    # torn) has no trustworthy era for any file: MoR reads, clones and
+    # commits that keep its files all raise, and nothing is committed.
     path = str(tmp_path / "badera")
     lake.write_snapshot(
         spark, spark.createDataFrame([(1,), (2,)], "k int"), path
@@ -496,8 +514,13 @@ def test_mor_era_fallback_when_eras_malformed(spark, tmp_path):
     doc = lake._read_manifest_doc(spark, path, 3)
     doc["eras"] = doc["eras"][:-1]  # misaligned on purpose
     lake._rewrite_json_atomic(spark, f"{path}/_manifests/v3.json", doc)
-    got = sorted(r.k for r in lake.read_snapshot_mor(spark, path).collect())
-    assert got == [1, 2]
+    with pytest.raises(ValueError, match="parallel"):
+        lake.read_snapshot_mor(spark, path)
+    with pytest.raises(ValueError, match="parallel"):
+        lake.shallow_clone(spark, path, str(tmp_path / "badclone"))
+    with pytest.raises(ValueError, match="parallel"):
+        lake.rollback_snapshot(spark, path, 3)
+    assert lake.latest_snapshot_version(spark, path) == 3
 
 
 def _mor_keys(spark, path, version=None):
@@ -852,3 +875,22 @@ def test_shallow_clone_zero_copy_isolation_and_sequence_rule(
     assert (1, "a") in {
         (r.k, r.val) for r in lake.read_snapshot_mor(spark, src).collect()
     }
+
+
+def test_manifest_publish_refuses_published_version(spark, tmp_path):
+    # Every attempt writes its own temp manifest, and a refused rename
+    # onto an existing v{N}.json is a commit conflict: the published
+    # document stays byte-identical and the loser leaves no temp file.
+    import os
+
+    path = str(tmp_path / "race")
+    lake.write_snapshot(spark, spark.createDataFrame([(1,)], "k int"), path)  # v1
+    lake.write_snapshot(spark, spark.createDataFrame([(2,)], "k int"), path)  # v2
+    mdir = os.path.join(path, "_manifests")
+    before = open(os.path.join(mdir, "v2.json"), "rb").read()
+    parent = lake._read_manifest_doc(spark, path, 1)
+    with pytest.raises(lake.CommitConflictError):
+        lake._commit_manifest(spark, path, 2, [], parent, operation="rollback")
+    assert open(os.path.join(mdir, "v2.json"), "rb").read() == before
+    assert not [n for n in os.listdir(mdir) if ".tmp" in n]
+    assert sorted(r.k for r in lake.read_snapshot(spark, path).collect()) == [1, 2]

@@ -13,7 +13,7 @@ import hashlib
 import re
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from glamira_end_to_end_data_pipeline_spark.functions import (
@@ -824,15 +824,19 @@ def test_ks_prefix_sum_matches_naive(spark, rows):
             st.tuples(st.just("expire"), st.just([])),
             st.tuples(st.just("rwm"), st.just([])),
             st.tuples(st.just("cas"), st.lists(st.integers(0, 9), min_size=1, max_size=4)),
+            st.tuples(st.just("rollback"), st.integers(1, 6)),
         ),
         min_size=2,
         max_size=6,
     )
 )
+# rollback past a compaction to a version holding CAS files, which
+# live in a directory that names no era
+@example(ops=[("cas", [1, 2]), ("delete", [2]), ("compact", []), ("rollback", 3)])
 def test_mor_lake_matches_reference_model(spark, tmp_path_factory, ops):
     """Model-based check of the merge-on-read lake: ANY interleaving of
     append / equality-delete / compact / WAP-publish / expiry /
-    rewrite-manifests (delete-checkpoint) commits
+    rewrite-manifests (delete-checkpoint) / CAS / rollback commits
     must read (via read_snapshot_mor) exactly what a sequential
     in-memory model holds — sequence rule, re-inserts, multiset
     semantics (duplicate keys in different appends both survive until
@@ -847,9 +851,13 @@ def test_mor_lake_matches_reference_model(spark, tmp_path_factory, ops):
     # model: list of (key, era) live rows; deletes remove rows with
     # era < delete version; compact rewrites all live rows at era v;
     # wap appends via stage+publish (same model as append — that
-    # equivalence IS the property); expire drops versions < cutoff
+    # equivalence IS the property); expire drops versions < cutoff;
+    # rollback to t reinstates t's rows with their eras, minus those a
+    # delete committed after t outranks
     live: list = []
     states = {}
+    snaps = {}  # version -> its live (key, era, rid) rows
+    deletes: list = []  # (delete version, doomed keys)
     rid = 0
     version = 0
     horizon = 1  # oldest still-readable version
@@ -878,6 +886,7 @@ def test_mor_lake_matches_reference_model(spark, tmp_path_factory, ops):
                 ["k"],
             )
             doomed = set(payload)
+            deletes.append((version, doomed))
             live = [
                 (key, era, r)
                 for key, era, r in live
@@ -910,6 +919,9 @@ def test_mor_lake_matches_reference_model(spark, tmp_path_factory, ops):
             version += 1
             out = lake.rewrite_manifests(spark, path)
             assert out["version"] == version
+            # metadata-only: live state unchanged; later MoR reads stop
+            # their walk at this checkpoint — the equivalence IS the
+            # property
         elif op == "cas":
             if version == 0:
                 continue  # CAS needs an existing head manifest
@@ -927,15 +939,23 @@ def test_mor_lake_matches_reference_model(spark, tmp_path_factory, ops):
             # equivalence (incl. manifest eras for the vcas_ dir) is
             # the property
             live.extend((key, version, r) for key, r in rows)
-            # metadata-only: live state unchanged; later MoR reads stop
-            # their walk at this checkpoint — the equivalence IS the
-            # property
+        elif op == "rollback":
+            if not horizon <= payload <= version:
+                continue  # expired or not yet committed
+            version += 1
+            assert lake.rollback_snapshot(spark, path, payload) == version
+            live = [
+                (key, era, r)
+                for key, era, r in snaps[payload]
+                if not any(key in doomed and era < dv for dv, doomed in deletes)
+            ]
         else:  # compact
             if version == 0:
                 continue
             version += 1
             lake.compact_snapshot(spark, path)
             live = [(key, version, r) for key, _, r in live]
+        snaps[version] = list(live)
         states[version] = sorted((key, r) for key, _, r in live)
     for v, expected in states.items():
         if v < horizon:

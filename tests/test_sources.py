@@ -436,21 +436,35 @@ def test_incremental_seed_is_bounded_walk(spark, tmp_path, monkeypatch):
     assert calls == [3, 2, 1, 4], calls
     assert len(calls) <= lake.EVER_CHECKPOINT_EVERY + 1
 
-    # legacy manifests (neither field) still seed correctly via the
-    # full prefix walk
-    import json
 
-    for v in (1, 2, 3, 4):
-        mf = tmp_path / "ever" / "_manifests" / f"v{v}.json"
-        d = json.loads(mf.read_text())
-        d.pop("ever", None)
-        d.pop("ever_delta", None)
-        mf.write_text(json.dumps(d))
-        crc = mf.parent / f".v{v}.json.crc"  # stale Hadoop checksum
-        if crc.exists():
-            crc.unlink()
-        spark.catalog.refreshByPath(str(mf))  # drop cached file size
-    assert lake.read_incremental(spark, p, 2, 3).count() == 0
+def test_commit_reads_parent_manifest_once(spark, tmp_path, monkeypatch):
+    # A commit's eras, stats and ever_delta all come from the ONE parent
+    # manifest it builds on; only a checkpoint version walks back for
+    # its full 'ever' list, and that walk is bounded by the interval.
+    p = str(tmp_path / "reads")
+    for i in range(4):
+        lake.write_snapshot(spark, spark.range(i * 2, i * 2 + 2), p)  # v1-v4
+    calls = []
+    orig = lake._read_manifest_doc
+
+    def counting(spark_, path_, version_):
+        calls.append(version_)
+        return orig(spark_, path_, version_)
+
+    monkeypatch.setattr(lake, "_read_manifest_doc", counting)
+    lake.write_snapshot(spark, spark.range(8, 10), p)  # v5: not a checkpoint
+    assert calls == [4], calls
+    n = lake.EVER_CHECKPOINT_EVERY
+    while lake.latest_snapshot_version(spark, p) < n - 1:
+        lake.rollback_snapshot(spark, p, 5)  # metadata-only filler commits
+    calls.clear()
+    assert lake.write_snapshot(spark, spark.range(10, 12), p) == n  # checkpoint
+    assert len(calls) <= n, calls
+    monkeypatch.undo()
+    doc = lake._read_manifest_doc(spark, p, n)
+    assert set(doc["ever"]) == set(lake._cumulative_ever(spark, p, n - 1)) | set(
+        doc["files"]
+    )
 
 
 def test_ever_checkpoint_boundary(spark, tmp_path):
