@@ -24,20 +24,25 @@ def safe_cast(col: Column | str, to: str) -> Column:
     return (F.col(col) if isinstance(col, str) else col).try_cast(to)
 
 
-def surrogate_key(*cols: Column | str) -> Column:
+def surrogate_key(*exprs: str) -> Column:
     """F4 — byte-exact ``dbt_utils.generate_surrogate_key``:
     ``md5(concat_ws('-', coalesce(cast(f as string), sentinel), ...))``
     (dbt_utils 1.3.2 macro, invoked in every ref dim/fact, e.g.
     ``fact_sales_order.sql:28-31``). Key equality across engines requires
-    the exact same string bytes, so NULLs become the dbt sentinel."""
-    parts = [
-        F.coalesce(
-            (F.col(c) if isinstance(c, str) else c).cast("string"),
-            F.lit(_DBT_NULL_SENTINEL),
-        )
-        for c in cols
-    ]
-    return F.md5(F.concat_ws("-", *parts))
+    the exact same string bytes, so NULLs become the dbt sentinel.
+
+    ``exprs`` are SQL expression texts (a column name is one); the key is
+    ONE ``F.expr``, the macro's own language, so it costs a single parse
+    instead of a py4j round trip per ``Column`` node."""
+    return F.expr(surrogate_key_sql(*exprs))
+
+
+def surrogate_key_sql(*exprs: str) -> str:
+    """:func:`surrogate_key` as SQL text, for ``selectExpr`` projections."""
+    parts = ", ".join(
+        f"coalesce(cast({e} AS string), '{_DBT_NULL_SENTINEL}')" for e in exprs
+    )
+    return f"md5(concat_ws('-', {parts}))"
 
 
 def stable_id_hash(*cols: Column | str) -> Column:

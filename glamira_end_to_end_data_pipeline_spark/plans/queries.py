@@ -2734,7 +2734,7 @@ def f_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         surrogate_key(
             "c_custkey",
-            F.nullif("c_mktsegment", F.lit("BUILDING")),
+            "nullif(c_mktsegment, 'BUILDING')",
             "c_nationkey",
         ).alias("composite_key"),
         surrogate_key("c_name").alias("name_key"),

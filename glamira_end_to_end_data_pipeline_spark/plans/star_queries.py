@@ -8,6 +8,13 @@ text below) — then runs the REAL model functions from
 ``plans.models``. What's compared is therefore the model semantics
 (typed projection, dedup-to-latest, surrogate keys, null-miss joins,
 spine generation), not the synthetic mapping.
+
+``summary_from_events`` runs on every chunk a micro-batch lands, so it
+is SQL text (:data:`SUMMARY_EXPRS`, one ``selectExpr``): 21 py4j round
+trips to build, where the same projection from ``Column`` nodes took
+1,361–1,676 (see ``plans.models``). The once-per-set-up inputs
+(``product_details_from_events``, ``ip_locations_from_events``) stay
+in the DSL.
 """
 
 from __future__ import annotations
@@ -29,67 +36,52 @@ from glamira_end_to_end_data_pipeline_spark.sources import read_table
 # ---------------------------------------------------------------------------
 
 
+_IP = (
+    "concat_ws('.', cast((user_id * 2654435761) % 223 + 1 AS string),"
+    " cast((user_id * 40503) % 256 AS string),"
+    " cast((user_id * 65537) % 256 AS string),"
+    " cast((user_id * 97) % 256 AS string))"
+)
+
+SUMMARY_EXPRS = (
+    "unix_timestamp(ts) AS time_stamp",
+    "date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS local_time",
+    "CASE WHEN user_id % 5 = 0 THEN cast(NULL AS string)"
+    " ELSE cast(user_id AS string) END AS user_id_db",
+    "CASE WHEN event_id % 6 = 0 THEN cast(NULL AS string)"
+    " ELSE concat('P', cast(event_id % 37 AS string)) END AS product_id",
+    "CASE WHEN event_id % 10 < 3"
+    " THEN concat('O', cast(event_id % 101 AS string)) END AS order_id",
+    "concat('D', cast(user_id % 7 AS string)) AS device_id",
+    "CASE WHEN event_id % 20 = 0 THEN cast(NULL AS string)"
+    " WHEN event_id % 21 = 0 THEN ''"
+    f" ELSE {_IP} END AS ip",
+    "CASE WHEN user_id % 11 = 0 THEN cast(NULL AS string)"
+    " ELSE concat('UA-', cast(user_id % 13 AS string)) END AS user_agent",
+    "CASE WHEN event_id % 7 = 0 THEN cast(NULL AS string)"
+    " ELSE element_at(array('1920x1080', '1366x768', '390x844'),"
+    " cast(user_id % 3 + 1 AS int)) END AS resolution",
+    "CASE WHEN event_id % 4 = 0 THEN cast(NULL AS string)"
+    " ELSE concat('https://ref.example/', cast(event_id % 5 AS string))"
+    " END AS referrer_url",
+    "concat('https://shop.example', CASE WHEN event_id % 3 = 0"
+    " THEN concat('/catalog/product/view/id/', cast(event_id % 37 AS string))"
+    " ELSE concat('/p/', cast(event_id % 37 AS string)) END) AS current_url",
+    "cast(user_id % 10 AS string) AS store_id",
+    "CASE WHEN user_id % 2 = 0 THEN '1.0' ELSE '2.0' END AS api_version",
+    "CASE WHEN user_id % 3 = 0 THEN cast(NULL AS string)"
+    " ELSE concat('u', cast(user_id AS string), '@example.com') END AS email_address",
+    "CASE WHEN event_id % 13 = 0 THEN 'N/A'"
+    " ELSE cast(round(value, 2) AS string) END AS price",
+    "element_at(array('EUR', 'USD', 'GBP', 'CHF'), cast(user_id % 4 + 1 AS int))"
+    " AS currency",
+)
+
+
 def summary_from_events(events: DataFrame) -> DataFrame:
-    eid, uid = F.col("event_id"), F.col("user_id")
-    ip = F.concat_ws(
-        ".",
-        ((uid * 2654435761) % 223 + 1).cast("string"),
-        ((uid * 40503) % 256).cast("string"),
-        ((uid * 65537) % 256).cast("string"),
-        ((uid * 97) % 256).cast("string"),
-    )
-    pid = F.concat(F.lit("P"), (eid % 37).cast("string"))
-    return events.select(
-        F.unix_timestamp("ts").alias("time_stamp"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("local_time"),
-        F.when(uid % 5 == 0, F.lit(None).cast("string"))
-        .otherwise(uid.cast("string"))
-        .alias("user_id_db"),
-        F.when(eid % 6 == 0, F.lit(None).cast("string")).otherwise(pid).alias(
-            "product_id"
-        ),
-        F.when(eid % 10 < 3, F.concat(F.lit("O"), (eid % 101).cast("string"))).alias(
-            "order_id"
-        ),
-        F.concat(F.lit("D"), (uid % 7).cast("string")).alias("device_id"),
-        F.when(eid % 20 == 0, F.lit(None).cast("string"))
-        .when(eid % 21 == 0, F.lit(""))
-        .otherwise(ip)
-        .alias("ip"),
-        F.when(uid % 11 == 0, F.lit(None).cast("string"))
-        .otherwise(F.concat(F.lit("UA-"), (uid % 13).cast("string")))
-        .alias("user_agent"),
-        F.when(eid % 7 == 0, F.lit(None).cast("string"))
-        .otherwise(
-            F.element_at(
-                F.array(F.lit("1920x1080"), F.lit("1366x768"), F.lit("390x844")),
-                (uid % 3 + 1).cast("int"),
-            )
-        )
-        .alias("resolution"),
-        F.when(eid % 4 == 0, F.lit(None).cast("string"))
-        .otherwise(F.concat(F.lit("https://ref.example/"), (eid % 5).cast("string")))
-        .alias("referrer_url"),
-        F.concat(
-            F.lit("https://shop.example"),
-            F.when(
-                eid % 3 == 0,
-                F.concat(F.lit("/catalog/product/view/id/"), (eid % 37).cast("string")),
-            ).otherwise(F.concat(F.lit("/p/"), (eid % 37).cast("string"))),
-        ).alias("current_url"),
-        (uid % 10).cast("string").alias("store_id"),
-        F.when(uid % 2 == 0, F.lit("1.0")).otherwise(F.lit("2.0")).alias("api_version"),
-        F.when(uid % 3 == 0, F.lit(None).cast("string"))
-        .otherwise(F.concat(F.lit("u"), uid.cast("string"), F.lit("@example.com")))
-        .alias("email_address"),
-        F.when(eid % 13 == 0, F.lit("N/A"))
-        .otherwise(F.round("value", 2).cast("string"))
-        .alias("price"),
-        F.element_at(
-            F.array(F.lit("EUR"), F.lit("USD"), F.lit("GBP"), F.lit("CHF")),
-            (uid % 4 + 1).cast("int"),
-        ).alias("currency"),
-    )
+    """``events`` as the reference's raw ``summary`` table, one SQL
+    expression per column (the Spark twin of :data:`SUMMARY_CTE`)."""
+    return events.selectExpr(*SUMMARY_EXPRS)
 
 
 SUMMARY_CTE = """

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from glamira_end_to_end_data_pipeline_spark.frames import local_frame
+from glamira_end_to_end_data_pipeline_spark.sources.tables import read_parquet
 
 
 def write_partitioned(
@@ -648,7 +649,7 @@ def _file_stats(
     should not also pay a single 100k-row action allocation."""
     if not files:
         return {}
-    df = spark.read.parquet(*files)
+    df = read_parquet(spark, files)
     aggs = []
     for c in cols:
         aggs.append(F.min(c).cast("string").alias(f"__mn_{c}"))
@@ -993,10 +994,18 @@ def _commit_manifest(
         # written by expiry's fold-forward and by rewrite_manifests'
         # delete-checkpoint consolidation.
         doc["carried_deletes"] = carried_deletes
-    if delete_checkpoint:
+    if delete_checkpoint or (
+        not (delete_files or carried_deletes)
+        and (kept is None or _deletes_free_checkpoint(kept))
+    ):
         # this manifest's own delete_files + carried_deletes cover
-        # EVERY equality delete visible at this version, so the MoR
+        # EVERY equality delete that can reach its files, so the MoR
         # reader's history walk may STOP here (see _collect_deletes).
+        # Without ``kept`` (v1, a replace, a compaction, which
+        # materializes every delete) no older delete reaches a file; a
+        # commit adding none on top of a deletes-free checkpoint (``kept``
+        # is then its parent) inherits the flag, so a table that never
+        # had a delete walks one manifest.
         doc["delete_checkpoint"] = True
     payload = json.dumps(doc).encode("utf-8")
     fs, _ = _hadoop_fs(spark, path)
@@ -1022,6 +1031,14 @@ def _commit_manifest(
                 f"attempt — retry against the new head"
             )
         raise IOError(f"could not commit manifest for v{version} under {path}")
+
+
+def _deletes_free_checkpoint(doc: dict) -> bool:
+    return bool(
+        doc.get("delete_checkpoint")
+        and not doc.get("delete_files")
+        and not doc.get("carried_deletes")
+    )
 
 
 def compact_snapshot(
@@ -1056,7 +1073,7 @@ def compact_snapshot(
         raise FileNotFoundError(f"no snapshots under {path}")
     prev_doc = _read_manifest_doc(spark, path, latest)
     version = latest + 1
-    compacted = read_snapshot_mor(spark, path, latest).repartition(n_files)
+    compacted = _read_mor(spark, path, prev_doc).repartition(n_files)
     files = _write_version_data(spark, compacted, path, version)
     # Column metrics must survive compaction: the old per-file stats
     # describe files this rewrite replaces, so RE-stat the compacted
@@ -1085,11 +1102,30 @@ def rollback_snapshot(spark: SparkSession, path: str, to_version: int) -> int:
     already delivered when first committed — re-delivering them would
     double-count). The reinstated files keep the eras the target
     records, so equality deletes committed after the target still
-    apply to them under the merge-on-read sequence rule. Returns the
-    new version number."""
+    apply to them under the merge-on-read sequence rule.
+
+    The reinstated files predate any checkpoint committed after the
+    target (a compaction there dropped the deletes it materialized), so
+    the rollback is itself a delete checkpoint carrying the deletes
+    visible at the target plus every delete committed after it. Returns
+    the new version number."""
     target = _read_manifest_doc(spark, path, to_version)
     version = latest_snapshot_version(spark, path) + 1
-    _commit_manifest(spark, path, version, [], target, operation="rollback")
+    dels, _walked = _collect_deletes(spark, path, to_version, head_doc=target)
+    for v in range(to_version + 1, version):
+        dfiles = _read_manifest_doc(spark, path, v).get("delete_files")
+        if dfiles:
+            dels.append((v, dfiles))
+    _commit_manifest(
+        spark,
+        path,
+        version,
+        [],
+        target,
+        operation="rollback",
+        carried_deletes=[{"version": v, "files": fs} for v, fs in dels] or None,
+        delete_checkpoint=True,
+    )
     return version
 
 
@@ -1107,13 +1143,14 @@ def read_snapshot(
     ``merge_schema=True`` unions the listed files' schemas (columns
     added by later appends surface as NULL on older files) — the
     schema-evolution read; the default single-schema read is cheaper
-    (no footer sweep) and right when the table schema is frozen."""
+    (no footer sweep, and the first listed file's footer is read on the
+    driver instead of in an inference job) and right when the table
+    schema is frozen."""
     if version is None:
         version = latest_snapshot_version(spark, path)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*_read_manifest(spark, path, version))
+    return read_parquet(
+        spark, _read_manifest(spark, path, version), merge_schema=merge_schema
+    )
 
 
 def read_incremental(
@@ -1437,8 +1474,10 @@ def _collect_deletes(
     Walks DOWNWARD from ``version`` and STOPS at the newest manifest
     flagged ``delete_checkpoint`` (its own ``delete_files`` +
     ``carried_deletes`` already cover everything below — see
-    :func:`rewrite_manifests`), so on a checkpointed table the walk is
-    O(commits since the last checkpoint), not O(table age). Expired
+    :func:`rewrite_manifests`; v1, replaces, compactions and commits
+    on top of them that add no delete are deletes-free checkpoints, see
+    :func:`_commit_manifest`), so the walk is O(commits since the last
+    checkpoint), not O(table age). Expired
     versions are skipped (their deletes were folded forward into the
     oldest retained manifest by :func:`expire_snapshots`). Pairs are
     deduplicated because the same delete can legally be visible twice
@@ -1632,11 +1671,15 @@ def read_snapshot_mor(
     the Iceberg v2 trade."""
     if version is None:
         version = latest_snapshot_version(spark, path)
-    doc = _read_manifest_doc(spark, path, version)
+    return _read_mor(spark, path, _read_manifest_doc(spark, path, version))
+
+
+def _read_mor(spark: SparkSession, path: str, doc: dict) -> DataFrame:
+    """:func:`read_snapshot_mor` of the version whose manifest is ``doc``."""
     files = doc["files"]
     eras = _eras(doc)
-    dels, _walked = _collect_deletes(spark, path, version, head_doc=doc)
-    base = spark.read.parquet(*files)
+    dels, _walked = _collect_deletes(spark, path, doc["version"], head_doc=doc)
+    base = read_parquet(spark, files)
     if not dels:
         return base
     # Era per row = the era the manifest records for its data FILE,
@@ -1674,7 +1717,7 @@ def read_snapshot_mor(
     key_cols = None
     parts = []
     for dv, dfiles in dels:
-        kd = spark.read.parquet(*dfiles)
+        kd = read_parquet(spark, dfiles)
         key_cols = kd.columns
         parts.append(kd.withColumn("__dv", F.lit(dv).cast("long")))
     keys = parts[0]

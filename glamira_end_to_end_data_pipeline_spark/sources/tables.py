@@ -14,8 +14,10 @@ every operator in this package is expressed declaratively; a
 
 from __future__ import annotations
 
+import json
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,6 +41,80 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips: ``.*`` and ``_*`` (a ``_k=v``
+    partition directory excepted)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _sample_file(path: str) -> str | None:
+    """``path`` itself when it is a file, else the first data file under
+    it in sorted order, skipping what Spark's listing skips; None when
+    there is none (the read then fails with Spark's own error)."""
+    if not os.path.isdir(path):
+        return path if os.path.exists(path) else None
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        for f in sorted(files):
+            if not _hidden(f):
+                return os.path.join(root, f)
+    return None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark infers for the Parquet file at ``path``, read on
+    the driver: the footer through Hadoop, converted by Spark's own
+    ``ParquetFileFormat.readSchemaFromFooter`` with a converter built from
+    the session conf (binary-as-string, INT96, TIMESTAMP_NTZ and
+    nanos-as-long settings), made nullable as every file source is.
+
+    Inference does the same work inside a one-task Spark job; a read
+    handed this schema runs no job. None when the footer cannot be read,
+    so the read falls back to inference and raises Spark's own error."""
+    jvm = spark._jvm
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        metadata = parquet.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jpath, spark._jsc.hadoopConfiguration()
+            ),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+    except Py4JJavaError:
+        return None
+    converter = parquet.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()
+    )
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(jpath, metadata), converter
+    )
+    return T.StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
+def read_parquet(
+    spark: SparkSession,
+    paths: list[str],
+    sample: str | None = None,
+    merge_schema: bool = False,
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken from
+    ``sample``'s footer (default ``paths[0]``, the file inference opens
+    for a list of files) by :func:`parquet_schema`, so the read runs no
+    inference job. A merge of every file's schema is only Spark's to
+    make: ``merge_schema=True`` or a session with
+    ``spark.sql.parquet.mergeSchema=true`` keeps its inference."""
+    reader = spark.read
+    if merge_schema:
+        return reader.option("mergeSchema", "true").parquet(*paths)
+    sample = sample or (paths[0] if paths else None)
+    merging = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    if sample is None or merging.lower() == "true":
+        return reader.parquet(*paths)
+    schema = parquet_schema(spark, sample)
+    return (reader if schema is None else reader.schema(schema)).parquet(*paths)
+
+
 # path -> frozenset of column names stored as Parquet TIMESTAMP(NANOS).
 # Footer-sniffed once per path (driver-side, metadata only — no data read).
 _NANOS_COLS_CACHE: dict[str, frozenset[str]] = {}
@@ -59,18 +135,7 @@ def _nanos_columns(path: str) -> frozenset[str]:
         import pyarrow.parquet as pq
         import pyarrow.types as pat
 
-        sample = path
-        if os.path.isdir(path):
-            sample = next(
-                (
-                    os.path.join(root, f)
-                    for root, _dirs, files in os.walk(path)
-                    for f in sorted(files)
-                    if f.endswith(".parquet")
-                ),
-                path,
-            )
-        schema = pq.read_schema(sample)
+        schema = pq.read_schema(_sample_file(path))
         cols = frozenset(
             f.name
             for f in schema
@@ -91,12 +156,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     dynamic semantic confs — notably
     ``spark.sql.legacy.parquet.nanosAsLong``, without which Spark 4
     refuses Parquet TIMESTAMP(NANOS) columns outright — are asserted
-    here, at the source boundary, not only in our session factory."""
+    here, at the source boundary, not only in our session factory. The
+    schema comes from one data file's footer (:func:`read_parquet`)."""
     ensure_runtime_confs(spark)
     file_path = os.path.join(sf_dir, f"{name}.parquet")
     dir_path = os.path.join(sf_dir, name)
     path = file_path if os.path.exists(file_path) else dir_path
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, [path], sample=_sample_file(path))
     # Parquet TIMESTAMP(NANOS) columns arrive as nanosecond longs
     # (spark.sql.legacy.parquet.nanosAsLong); convert to microsecond
     # timestamps — same truncation DuckDB/pyarrow apply on read. The

@@ -5,9 +5,11 @@ Usage: python scripts/time_entry.py <name> [<name> ...] [--runs N]
 Times each named registry entry exactly like bench.py does (plan →
 noop sink on the warm session), printing every run plus the min —
 the steady-state number the bench would record — the Spark jobs and
-stages each run issued (from the JVM status store) and the classes it
-compiled (Janino compiles, i.e. codegen-cache misses), so a job-count
-regression or codegen-cache thrash shows without a benchmark run.
+stages each run issued (from the JVM status store), the classes it
+compiled (Janino compiles, i.e. codegen-cache misses) and the py4j
+round trips the Python driver made to the JVM, so a job-count
+regression, codegen-cache thrash or a plan built node by node over
+py4j shows without a benchmark run.
 Keeps the bench contract untouched; this is a measurement-only tool.
 """
 
@@ -49,6 +51,22 @@ def classes_compiled(spark) -> int:
     return codegen.METRIC_COMPILATION_TIME().getCount()
 
 
+def count_py4j(spark):
+    """Count every py4j command from now on; returns a function giving the
+    count so far. The JVM-reference frees that py4j's finalizer thread
+    sends when Python drops an object are round trips too, and count."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    return lambda: sent[0]
+
+
 def main() -> None:
     args = sys.argv[1:]
     runs = 3
@@ -84,19 +102,23 @@ def main() -> None:
         .select(__warm((F.col("id") * 1.0).alias("v")).alias("w"))
     )
 
+    py4j = count_py4j(spark)
     for name in args:
-        ts, js, cs = [], [], []
+        ts, js, cs, ps = [], [], [], []
         for i in range(runs):
             group = f"{name}#{i}"
             spark.sparkContext.setJobGroup(group, name)
             c0 = classes_compiled(spark)
+            p0 = py4j()
             t0 = time.time()
             consume(qs[name](spark, sf_dir))
             ts.append(round(time.time() - t0, 3))
+            ps.append(py4j() - p0)
             cs.append(classes_compiled(spark) - c0)
             js.append("{}/{}".format(*jobs_and_stages(spark, group)))
         print(
-            f"{name}: runs={ts} min={min(ts)} jobs/stages={js} classes_compiled={cs}"
+            f"{name}: runs={ts} min={min(ts)} jobs/stages={js} "
+            f"classes_compiled={cs} py4j={ps}"
         )
 
 

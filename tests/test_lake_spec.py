@@ -559,6 +559,25 @@ def test_rewrite_manifests_checkpoint_bounds_walk(spark, tmp_path):
     assert lake.read_incremental(spark, path, 3, 4).count() == 0
 
 
+def test_rollback_past_compaction_keeps_materialized_deletes(spark, tmp_path):
+    # A compaction is a deletes-free checkpoint (it materialized the
+    # deletes below it), but a rollback reinstates files older than it:
+    # the rollback commit carries the deletes that reach them itself.
+    path = str(tmp_path / "rbc")
+    lake.write_snapshot(spark, spark.createDataFrame([(0,), (1,), (2,)], "k int"), path)  # v1
+    lake.delete_snapshot(spark, spark.createDataFrame([(1,)], "k int"), path, ["k"])  # v2
+    lake.compact_snapshot(spark, path)                                      # v3
+    lake.write_snapshot(spark, spark.createDataFrame([(5,)], "k int"), path)  # v4
+    assert lake._collect_deletes(spark, path, 4) == ([], 1)
+    assert lake.rollback_snapshot(spark, path, 1) == 5
+    doc = lake._read_manifest_doc(spark, path, 5)
+    assert doc["delete_checkpoint"] is True
+    assert [cd["version"] for cd in doc["carried_deletes"]] == [2]
+    assert _mor_keys(spark, path) == [0, 2]
+    lake.write_snapshot(spark, spark.createDataFrame([(1,)], "k int"), path)  # v6
+    assert _mor_keys(spark, path) == [0, 1, 2]  # the re-insert outranks v2
+
+
 def test_rewrite_manifests_composes_with_expiry(spark, tmp_path):
     # Checkpoint BELOW the expiry cutoff: the fold-forward reads the
     # checkpoint's carried_deletes; an expired checkpoint's

@@ -94,6 +94,53 @@ def test_star_fact_no_forced_broadcast_on_unbounded_dims(spark, registry):
         )
 
 
+def test_star_models_py4j_round_trip_budget(spark, monkeypatch):
+    # The per-chunk models (summary -> stg -> fact) are SQL text: one
+    # selectExpr / F.expr per projection or join condition, where the
+    # Column DSL paid about three py4j round trips per expression node
+    # (about 2,900 per chunk). Measured 147; the bound leaves room for
+    # PySpark-version drift, not for a return to node-by-node building.
+    import threading
+
+    from glamira_end_to_end_data_pipeline_spark.plans import models
+    from glamira_end_to_end_data_pipeline_spark.plans import star_queries as sq
+    from glamira_end_to_end_data_pipeline_spark.sources import read_table
+    from tests.conftest import SF_ORACLE
+
+    events = read_table(spark, SF_ORACLE, "events")
+    star = models.build_star(
+        sq.summary_from_events(events),
+        sq.ip_locations_from_events(events),
+        sq.product_details_from_events(events),
+    )
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+    me = threading.get_ident()
+
+    def counting(command, *args, **kwargs):
+        # py4j's finalizer thread frees earlier garbage's JVM references
+        # concurrently; count only this thread's commands
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        stg = models.stg_summary(sq.summary_from_events(events))
+        models.fact_sales_order(
+            stg,
+            star["dim_product"],
+            star["dim_customer"],
+            star["dim_location"],
+            star["dim_date"],
+            star["dim_session_context"],
+        )
+    finally:
+        monkeypatch.undo()
+    assert len(sent) <= 200, f"{len(sent)} py4j round trips to build one chunk's models"
+
+
 def test_ip_enrichment_no_nested_loop(spark, registry):
     # bucketed range join = hash join on the bucket key + residual band
     # filter; a BroadcastNestedLoopJoin here scans every geo range per

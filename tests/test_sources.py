@@ -15,7 +15,11 @@ from glamira_end_to_end_data_pipeline_spark.sources import lake
 
 from glamira_end_to_end_data_pipeline_spark.session import ensure_runtime_confs
 from glamira_end_to_end_data_pipeline_spark.sources import read_table
-from glamira_end_to_end_data_pipeline_spark.sources.tables import _nanos_columns
+from glamira_end_to_end_data_pipeline_spark.sources.tables import (
+    TABLES,
+    _nanos_columns,
+    parquet_schema,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -465,6 +469,127 @@ def test_commit_reads_parent_manifest_once(spark, tmp_path, monkeypatch):
     assert set(doc["ever"]) == set(lake._cumulative_ever(spark, p, n - 1)) | set(
         doc["files"]
     )
+
+
+def test_compaction_reads_head_manifest_once(spark, tmp_path, monkeypatch):
+    # Every manifest of a table that never had a delete is a delete
+    # checkpoint (v1, then each commit adding none on top of one), and
+    # compaction hands its head doc to the merge-on-read read: compacting
+    # a deletes-free 5-version table reads the head and nothing else.
+    p = str(tmp_path / "compact_reads")
+    for i in range(5):
+        lake.write_snapshot(spark, spark.range(i * 2, i * 2 + 2), p)  # v1-v5
+    calls = []
+    orig = lake._read_manifest_doc
+
+    def counting(spark_, path_, version_):
+        calls.append(version_)
+        return orig(spark_, path_, version_)
+
+    monkeypatch.setattr(lake, "_read_manifest_doc", counting)
+    assert lake.compact_snapshot(spark, p) == (6, 1)
+    assert calls == [5], calls
+    monkeypatch.undo()
+    assert lake._read_manifest_doc(spark, p, 6)["delete_checkpoint"] is True
+    assert sorted(r.id for r in lake.read_snapshot_mor(spark, p).collect()) == list(
+        range(10)
+    )
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs that ``fn()`` starts, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reads_run_no_spark_job(spark, tmp_path):
+    # The schema comes from one footer read on the driver, so building a
+    # table or snapshot read runs no schema-inference job.
+    p = str(tmp_path / "nojob")
+    lake.write_snapshot(spark, spark.range(4), p)
+    lake.write_snapshot(spark, spark.range(4, 8), p)
+    assert _jobs_run_by(spark, lambda: read_table(spark, SF, "events")) == 0
+    assert _jobs_run_by(spark, lambda: lake.read_snapshot(spark, p)) == 0
+    assert _jobs_run_by(spark, lambda: lake.read_snapshot_mor(spark, p)) == 0
+    # the job counter does see inference where it still runs
+    files = lake._read_manifest(spark, p, 2)
+    assert _jobs_run_by(spark, lambda: spark.read.parquet(*files)) >= 1
+
+
+def test_footer_schema_matches_inference_on_tables(spark):
+    import os
+
+    ensure_runtime_confs(spark)
+    sf = "/root/testdata/sf0.01"
+    for name in TABLES:
+        path = os.path.join(sf, f"{name}.parquet")
+        assert parquet_schema(spark, path) == spark.read.parquet(path).schema, name
+
+
+def test_footer_schema_matches_inference_on_nanos_and_lake(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ensure_runtime_confs(spark)
+    nanos_file = str(tmp_path / "nanos.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array([1, 2, 3], pa.timestamp("ns")),
+                "s": pa.array(["a", None, "c"], pa.string()),
+            }
+        ),
+        nanos_file,
+        coerce_timestamps=None,
+    )
+    schema = parquet_schema(spark, nanos_file)
+    assert schema == spark.read.parquet(nanos_file).schema
+    assert isinstance(schema["ts"].dataType, T.LongType)  # nanosAsLong
+    # a Spark-written snapshot file carries Spark's own schema metadata
+    p = str(tmp_path / "lake")
+    lake.write_snapshot(
+        spark,
+        spark.range(3).select(
+            "id", F.col("id").cast("decimal(12,2)").alias("d"), F.array("id").alias("a")
+        ),
+        p,
+    )
+    first = lake._read_manifest(spark, p, 1)[0]
+    assert parquet_schema(spark, first) == spark.read.parquet(first).schema
+    assert lake.read_snapshot(spark, p).schema == spark.read.parquet(first).schema
+    assert parquet_schema(spark, str(tmp_path / "missing.parquet")) is None
+
+
+def test_evolved_lake_default_read_keeps_first_schema(spark, tmp_path):
+    # A later append adds a column: the default read keeps today's
+    # single-footer schema (the first listed file's), and merge_schema
+    # still unions every file's.
+    p = str(tmp_path / "evolve")
+    lake.write_snapshot(spark, spark.range(2).selectExpr("id"), p)
+    lake.write_snapshot(spark, spark.range(2, 4).selectExpr("id", "id * 10 AS v"), p)
+    files = lake._read_manifest(spark, p, 2)
+    inferred = spark.read.parquet(*files)
+    assert lake.read_snapshot(spark, p).schema == inferred.schema
+    assert lake.read_snapshot(spark, p).columns == ["id"]
+    merged = lake.read_snapshot(spark, p, merge_schema=True)
+    assert merged.columns == ["id", "v"]
+    assert sorted((r.id, r.v) for r in merged.collect()) == [
+        (0, None), (1, None), (2, 20), (3, 30)
+    ]
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert lake.read_snapshot(spark, p).columns == ["id", "v"]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
 
 
 def test_ever_checkpoint_boundary(spark, tmp_path):
