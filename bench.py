@@ -1,14 +1,19 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Headline benchmark: times the headline registry entries on
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and prints ONE JSON
+line, writing no file:
 
-Each query is executed twice after a warmup pass of the session (JVM +
-codegen + Arrow worker pool warm) and the MIN is reported (steady-state
-methodology — see the rationale comment in main(); the first-run total
-is kept in the JSON). Timing covers plan → execute into the JVM noop
-sink so neither Python row serialization nor driver-side pandas
-conversion pollutes the numbers.
+    {"queries": {name: sec}, "methodology": ..., "first_run_total": sec,
+     "metric": "headline_queries_total_time", "value": sec, "unit": "sec",
+     "sf": ...}
+
+After a warm-up of the session (JVM and codegen, the Arrow worker pool,
+the write-once bucketed tables), each entry runs twice and the min is
+reported (steady state); the sum of the first runs is kept as
+``first_run_total``. Timing covers plan → execution into the JVM noop
+sink, so neither Python row serialization nor a driver collect is
+counted.
+
+Usage: python bench.py
 """
 
 from __future__ import annotations
@@ -196,7 +201,6 @@ HEADLINE = [
     "dq_checksum_reconcile",
     "stream_wap_microbatch",
     "emb_binary_quant_recall",
-    # round-10 additions
     "graph_scc_hybrid_live",
     "lake_mor_equality_deletes",
     "lake_read_by_tag",
@@ -212,7 +216,6 @@ HEADLINE = [
     "dq_chi2_categorical_drift",
     "w_cusum_changepoint",
     "lake_expire_versions",
-    # round-11 additions
     "lake_mor_dense_deletes",
     "w_theil_sen_trend",
     "dq_benford_first_digit",
@@ -230,7 +233,6 @@ HEADLINE = [
     "a_gini_index_exact",
     "a_mutual_information_terms",
     "lake_conditional_commit",
-    # round-12 additions (deferred-graded; benched from day one)
     "dq_mann_whitney_u",
     "a_spearman_corr",
     "dq_t_closeness",
@@ -291,129 +293,22 @@ HEADLINE = [
     "emb_ivf_decremental",
 ]
 
-
-def _prev_round_queries() -> tuple[str | None, dict[str, float]]:
-    """Per-query timings from the previous ROUND, for the cross-round
-    MEDIAN per-query ratio — the honest comparison metric (the r10
-    analysis showed raw totals track the host's machine share and the
-    linear normalized model over-corrects on this latency-bound
-    suite). Preferred source: the round-close full snapshot
-    ``BENCH_local_r<N>.json`` (complete per-query map — written by the
-    closing bench run each round since r11, so ratio_n_common covers
-    the whole suite). Fallback: the latest driver record
-    ``BENCH_r<N>.json``, whose ~2000-char stdout tail yields ~55
-    regex-recovered pairs — still plenty for a median."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    # the round in progress = newest graded round + 1; a snapshot from
-    # the round IN PROGRESS must not serve as its own baseline (it
-    # would compare a run against itself instead of against the
-    # previous round)
-    cur_round = 1 + max(
-        (
-            int(m.group(1))
-            for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-            if (m := re.search(r"CORRECTNESS_r(\d+)\.json", p))
-        ),
-        default=0,
-    )
-    best_n, best_path = -1, None
-    for path in glob.glob(os.path.join(here, "BENCH_local_r*.json")):
-        m = re.search(r"BENCH_local_r(\d+)\.json", path)
-        if m and best_n < int(m.group(1)) < cur_round:
-            best_n, best_path = int(m.group(1)), path
-    if best_path is not None:
-        try:
-            with open(best_path) as fh:
-                doc = json.load(fh)
-            qmap = doc.get("queries") or {}
-            if qmap:
-                return (
-                    f"r{best_n} (full local snapshot)",
-                    {k: float(v) for k, v in qmap.items()},
-                )
-        except (OSError, json.JSONDecodeError):
-            pass
-    best_n, best_path = -1, None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json", path)
-        if m and int(m.group(1)) > best_n:
-            best_n, best_path = int(m.group(1)), path
-    if best_path is None:
-        return None, {}
-    try:
-        with open(best_path) as fh:
-            doc = json.load(fh)
-    except (OSError, json.JSONDecodeError):
-        return None, {}
-    qmap = doc.get("queries") or (doc.get("parsed") or {}).get("queries")
-    if not qmap:
-        tail = doc.get("tail") or ""
-        qmap = {
-            k: float(v)
-            for k, v in re.findall(r'"([a-z0-9_]+)": ([0-9.]+),', tail)
-            if k not in ("value", "sf", "first_run_total")
-        }
-    return f"r{best_n}", {k: float(v) for k, v in (qmap or {}).items()}
+RUNS = 2
 
 
-def _busy(n: int) -> int:
-    s = 0
-    for i in range(n):
-        s += i * i
-    return s
+def consume(df) -> None:
+    """Execute every row of ``df`` in the JVM noop sink: no Python row
+    serialization and no driver collect."""
+    df.write.format("noop").mode("overwrite").save()
 
 
-def _host_probe() -> dict:
-    """Fixed CPU workload timed single-thread and 32-way, recorded with
-    every bench run so cross-round comparisons can separate CODE
-    regressions from HOST throughput swings: in round 8 every query —
-    including plan-untouched ones — ran ~1.6× slower than the round-7
-    record, and a probe like this one attributed it (single-thread speed
-    unchanged; 32-way scaling efficiency 55%, i.e. ~17 effective cores —
-    the container's share of the machine shrank, not the plans)."""
-    import concurrent.futures
-
-    n = 5_000_000
-    t0 = time.time()
-    _busy(n)
-    single = time.time() - t0
-    t0 = time.time()
-    with concurrent.futures.ProcessPoolExecutor(32) as ex:
-        list(ex.map(_busy, [n] * 32))
-    par = time.time() - t0
-    return {
-        "single_s": round(single, 3),
-        "par32_wall_s": round(par, 3),
-        "effective_cores": round(32 * single / par, 1) if par > 0 else None,
-    }
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    spark = get_spark(app_name="bench")
-
-    qs = queries()
-    names = [n for n in HEADLINE if n in qs]
-
-    def consume(df):
-        # noop sink: full JVM-side execution of every row, no Python
-        # serialization and no driver collect.
-        df.write.format("noop").mode("overwrite").save()
-
-    # warmup: pay JVM/codegen startup once
+def warm_up(spark, qs: dict, sf_dir: str) -> None:
+    """Pay the session's one-time costs before anything is timed."""
+    # JVM and codegen startup
     consume(qs["flagship_daily_events"](spark, sf_dir))
-    # ... and the Python/Arrow worker-pool fork + pandas import once.
-    # Root cause of the r3 "mm_extract_features 3.1x regression": the
-    # first Arrow-UDF stage of a session forks the Python worker pool
-    # (~2.2 s measured — isolated run0 3.11 s vs run1 0.91 s on the
-    # same fixed 256-row input); whichever Arrow query runs first in
-    # the headline absorbs it. The pool is session-wide and reused, so
-    # one trivial pandas_udf over all cores moves that cost into
-    # warmup, where JVM startup already lives.
+    # The first Arrow-UDF stage of a session forks the Python worker pool
+    # (about 2 s); the pool is reused, so one trivial pandas UDF over all
+    # cores keeps that cost off whichever Arrow entry runs first.
     from pyspark.sql import functions as F
 
     @F.pandas_udf("double")
@@ -424,166 +319,45 @@ def main() -> None:
         spark.range(0, 1024, 1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
         .select(__warm((F.col("id") * 1.0).alias("v")).alias("w"))
     )
-    # pre-warm the one-time bucketed-table writes (write-once/query-many
-    # by design — sources/bucketing.py reuses catalog tables), so the
-    # timed run below measures the recurring zero-Exchange join, not the
-    # setup shuffle it exists to amortize.
-    if "j_bucketed_colocated" in qs:
-        consume(qs["j_bucketed_colocated"](spark, sf_dir))
+    # The bucketed tables are written once and queried many times
+    # (sources/bucketing.py reuses catalog tables), so the timed runs
+    # measure the zero-Exchange join, not the setup shuffle.
+    consume(qs["j_bucketed_colocated"](spark, sf_dir))
 
-    # Methodology (r4): TWO timed executions per query, report the min
-    # (steady-state), with the first-run total also recorded. Rationale,
-    # measured in this container: single-shot times are dominated by
-    # environment noise — the same fixed-input query swung 0.93 s ↔
-    # 6.7 s across identically-structured sessions (JVM/JIT/GC counters
-    # ruled out: code cache 11% full, GC <2.5 s/session) — while warm
-    # second runs are stable to ~±15% across every probe. The r3-era
-    # concern that a second pass saturates the JIT code cache predates
-    # the 2g segmented-cache fix and no longer applies (108 MB/2 GB
-    # used after a full double pass). Steady-state is also the honest
-    # 100 TB number: production queries run for minutes, so per-session
-    # compile/JIT transients amortize to zero.
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    # Probe the host's machine share BEFORE and AFTER the timed sweep
-    # and normalize by the MEAN: a single point-in-time probe
-    # misattributes mid-run share swings (r10 measured 6.2 vs 10.1
-    # effective cores for two back-to-back runs whose raw per-query
-    # times were comparable — the probe instant, not the run, differed).
-    probe_pre = _host_probe()
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+    spark = get_spark(app_name="bench")
+    qs = queries()
+    warm_up(spark, qs, sf_dir)
+
     timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for i in range(max(1, runs)):
+    first_total = 0.0
+    for name in (n for n in HEADLINE if n in qs):
+        runs = []
+        for _ in range(RUNS):
             t0 = time.time()
             consume(qs[name](spark, sf_dir))
-            dt = time.time() - t0
-            if i == 0:
-                cold[name] = round(dt, 3)
-            best = min(best, dt)
-        timings[name] = round(best, 3)
+            runs.append(time.time() - t0)
+        first_total += runs[0]
+        timings[name] = round(min(runs), 3)
 
-    total = round(sum(timings.values()), 3)
-    probe_post = _host_probe()
-    cores = [
-        p.get("effective_cores")
-        for p in (probe_pre, probe_post)
-        if p.get("effective_cores")
-    ]
-    eff = round(sum(cores) / len(cores), 1) if cores else None
-    probe = {
-        "pre": probe_pre,
-        "post": probe_post,
-        "effective_cores": eff,
-    }
-    # Cross-round headline: MEDIAN per-query ratio vs the latest driver
-    # record (r10 VERDICT task: publish this as the primary metric —
-    # per-entry medians are robust to both host-share swings and the
-    # probe's own noise, unlike raw or linearly-normalized totals).
-    prev_label, prev_q = _prev_round_queries()
-    ratios = sorted(
-        timings[n] / prev_q[n]
-        for n in timings
-        if n in prev_q and prev_q[n] > 0
-    )
-    median_ratio = (
-        round(
-            (
-                ratios[len(ratios) // 2]
-                if len(ratios) % 2
-                else (ratios[len(ratios) // 2 - 1] + ratios[len(ratios) // 2]) / 2
-            ),
-            3,
+    # The per-query map goes first and the headline scalars last, so a
+    # reader that keeps only the tail of stdout still has the summary.
+    print(
+        json.dumps(
+            {
+                "queries": timings,
+                "methodology": f"min of {RUNS} runs/query (steady-state)",
+                "first_run_total": round(first_total, 3),
+                "metric": "headline_queries_total_time",
+                "value": round(sum(timings.values()), 3),
+                "unit": "sec",
+                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            }
         )
-        if ratios
-        else None
     )
-    doc = {
-        "queries": timings,
-        "methodology": f"min of {runs} runs/query (steady-state)",
-        "first_run_total": round(sum(cold.values()), 3),
-        "host_probe": probe,
-        "median_ratio_vs_prev": median_ratio,
-        "ratio_baseline": prev_label,
-        "ratio_n_common": len(ratios),
-        # Host-normalized total: what this run would cost on a host
-        # actually delivering the nominal 32 cores (total × eff/32,
-        # the linear model the round-8/9 cross-round analysis used).
-        # Compare THIS number across rounds before calling a fleet-wide
-        # regression; per-query ratios far above the fleet median are
-        # the real suspects.
-        "value_normalized_32c": (
-            round(total * eff / 32, 3) if eff else None
-        ),
-        "metric": "headline_queries_total_time",
-        "value": total,
-        "unit": "sec",
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "notes": (
-            "median_ratio_vs_prev is the PRIMARY cross-round metric "
-            "(r10 finding: three back-to-back runs measured raw totals "
-            "270/301/321 s at probe shares 6.2/10.1/13.7 cores — raw "
-            "did NOT scale with the probe, so the linear raw*eff/32 "
-            "model over-corrects on this latency-bound suite; per-query "
-            "medians are robust to both host swings and probe noise). "
-            "Baseline map: the previous round's full BENCH_local_r<N> "
-            "snapshot when present (ratio_n_common ~= the whole suite), "
-            "else regex-recovered from the driver record's bounded "
-            "stdout tail (~55 pairs); warm single-query swings up to "
-            "~1.5x are noise. r13 re-measure of the six r12-flagged "
-            "code-untouched regressions (3x solo, r10 methodology, "
-            "16.0-effective-core probe): graph_scc_exact 1.03x, "
-            "graph_hits_scores 1.23x, emb_filtered_ann_topk 0.88x, "
-            "stream_snapshot_commits 0.99x, lake_compact_commit 1.02x, "
-            "dedup_exact_spans 0.77x vs the r12 record — noise "
-            "confirmed (a second same-session solo batch of "
-            "graph_hits_scores swung 2.33->13.96s on identical code, "
-            "the host-share signature). r13 entries: the four new "
-            "incremental/composed capstones land at ~3-9s warm each; "
-            "dedup_lsh_index_incremental's floor is the admission-time "
-            "corpus build (amortized in production, paid per graded "
-            "run); star_fact_sales_order_incremental pays two full "
-            "fact builds by design (the two-load incremental proof)."
-        ),
-    }
-    # The driver keeps only a bounded TAIL of stdout (~2000 chars), which
-    # truncated 49 of 114 per-query timings out of BENCH_r05.json — so
-    # the COMPLETE result (plus the first-run map, useful for cold-path
-    # regressions) is also written to an in-repo file every run; the
-    # committed copy is the durable per-query record each round's
-    # regression comparison reads.
-    try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        out_path = os.path.join(here, "BENCH_local.json")
-        with open(out_path, "w") as fh:
-            json.dump({**doc, "first_runs": cold}, fh, indent=1, sort_keys=False)
-            fh.write("\n")
-        # Round-stamped full snapshot: the NEXT round's ratio baseline
-        # (see _prev_round_queries — the driver record keeps only a
-        # truncated tail, this file keeps the complete per-query map).
-        # Idempotent per round; the last run before round close wins.
-        import glob as _glob
-        import re as _re
-
-        cur_round = 1 + max(
-            (
-                int(m.group(1))
-                for p in _glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-                if (m := _re.search(r"CORRECTNESS_r(\d+)\.json", p))
-            ),
-            default=0,
-        )
-        snap_path = os.path.join(here, f"BENCH_local_r{cur_round}.json")
-        with open(snap_path, "w") as fh:
-            json.dump(doc, fh, indent=1, sort_keys=False)
-            fh.write("\n")
-    except OSError:
-        pass  # a read-only checkout must not fail the bench
-    # Stdout field order is deliberate: the per-query dict (the bulk —
-    # several KB at 100+ queries) goes FIRST and the headline scalars
-    # LAST, so the driver's bounded tail capture always retains the
-    # summary numbers. Full-line parsers are order-insensitive.
-    print(json.dumps(doc))
 
 
 if __name__ == "__main__":

@@ -732,17 +732,12 @@ def read_snapshot_pruned(
         return st[0] <= _probe_str(hi) and st[1] >= _probe_str(lo)
 
     keep = [f for f in files if may_match(f)]
-    reader = spark.read
-    if merge_schema:
-        # schema-evolved snapshots: without the union schema an
-        # arbitrary stat-less old file can win inference and the
-        # filter column fails to resolve (see read_snapshot).
-        reader = reader.option("mergeSchema", "true")
+    # merge_schema: on a schema-evolved snapshot the first kept file's
+    # schema may lack the filter column (see read_snapshot).
+    df = read_parquet(spark, keep or files, merge_schema=merge_schema)
     if not keep:
-        empty = reader.parquet(*files).limit(0)
-        return empty.filter(F.col(col).between(lo, hi)), 0, len(files)
-    df = reader.parquet(*keep).filter(F.col(col).between(lo, hi))
-    return df, len(keep), len(files)
+        df = df.limit(0)
+    return df.filter(F.col(col).between(lo, hi)), len(keep), len(files)
 
 
 # Hive partition-path conventions, mirrored from Spark's
@@ -850,11 +845,10 @@ def read_snapshot_spec_pruned(
     residual = (
         F.col(col).isNull() if value is None else F.col(col) == F.lit(value)
     )
+    df = read_parquet(spark, keep_files or files)
     if not keep_files:
-        empty = spark.read.parquet(*files).limit(0)
-        return empty.filter(residual), 0, len(files), 0
-    df = spark.read.parquet(*keep_files).filter(residual)
-    return df, len(keep_files), len(files), n_spec_kept
+        df = df.limit(0)
+    return df.filter(residual), len(keep_files), len(files), n_spec_kept
 
 
 def _write_version_data(
@@ -1225,7 +1219,7 @@ def read_incremental(
         seen |= set(files)
     if not delta:
         return read_snapshot(spark, path, to_version).limit(0)
-    return spark.read.parquet(*delta)
+    return read_parquet(spark, delta)
 
 
 def snapshot_diff(
@@ -1923,7 +1917,7 @@ def read_branch(spark: SparkSession, path: str, branch: str) -> DataFrame:
         if doc["base_version"] > 0
         else []
     )
-    return spark.read.parquet(*(base_files + doc["files"]))
+    return read_parquet(spark, base_files + doc["files"])
 
 
 def publish_branch(spark: SparkSession, path: str, branch: str) -> int:

@@ -11,10 +11,11 @@ trade-off is the write path: producing a positional delete requires
 READING the data to find each victim's ordinal (Iceberg's
 ``DeleteFilter`` does exactly this scan), where an equality delete
 writes blind. Both flavors exist in Iceberg v2 for that reason; this
-module supplies the positional half, deliberately standalone from the
-snapshot-manifest lifecycle in ``lake.py`` (whose graded entries are
-mid-rotation) — integration with versioned manifests is the natural
-next step once those entries rotate back into a re-grade window.
+module supplies the positional half as a standalone layout under one
+table path, apart from ``lake.py``'s snapshot manifests: data files in
+file-group directories under ``data/``, (file, pos) tombstones under
+``deletes/`` and deletion vectors under ``dv/``. A table's state is
+what those directories hold; there are no versions to travel to.
 
 Row ordinals are assigned AT WRITE TIME and stored (``__pos``), exactly
 like Iceberg writers track positions: ``write_data`` hash-partitions on

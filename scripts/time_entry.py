@@ -1,9 +1,9 @@
-"""Solo per-entry timing harness (optimization rounds).
+"""Solo per-entry timing harness.
 
 Usage: python scripts/time_entry.py <name> [<name> ...] [--runs N]
 
-Times each named registry entry exactly like bench.py does (plan →
-noop sink on the warm session), printing every run plus the min —
+Times each named registry entry exactly like bench.py does (its warm-up,
+then plan → noop sink on the warm session), printing every run plus the min —
 the steady-state number the bench would record — the Spark jobs and
 stages each run issued (from the JVM status store), the classes it
 compiled (Janino compiles, i.e. codegen-cache misses) and the py4j
@@ -22,6 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import queries  # noqa: E402
+from bench import consume, warm_up  # noqa: E402
 from glamira_end_to_end_data_pipeline_spark import get_spark  # noqa: E402
 
 
@@ -85,22 +86,7 @@ def main() -> None:
             + ", ".join(sorted(qs))
         )
     spark = get_spark(app_name="time_entry")
-
-    def consume(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    # same warmup as bench.py: JVM/codegen + Arrow worker pool
-    consume(qs["flagship_daily_events"](spark, sf_dir))
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("double")
-    def __warm(v):
-        return v
-
-    consume(
-        spark.range(0, 1024, 1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-        .select(__warm((F.col("id") * 1.0).alias("v")).alias("w"))
-    )
+    warm_up(spark, qs, sf_dir)
 
     py4j = count_py4j(spark)
     for name in args:

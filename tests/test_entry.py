@@ -46,6 +46,18 @@ def test_registry_is_in_registration_order():
     assert list(os_) == [n for n in qs if n in os_]
 
 
+def test_readme_entry_count_matches_registry():
+    """The layout section of README states the registry's size."""
+    import re
+
+    readme = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "README.md"
+    )
+    with open(readme) as fh:
+        counts = re.findall(r"\((\d+) entries, every one with a", fh.read())
+    assert counts == [str(len(queries()))]
+
+
 def test_check_oracle_rejects_unknown_names(monkeypatch, capsys):
     """A misspelled entry name fails the self-check before any Spark
     work instead of being skipped into a clean ``0 failures`` run."""

@@ -385,7 +385,13 @@ def test_ivf_topk_reuses_inverted_lists_of_its_own_corpus(spark):
     q = emb.filter(F.col("vec_id") < 10)
     c = emb.filter(F.col("vec_id") >= 10)
     jsc = spark.sparkContext._jsc
-    persisted_before = jsc.getPersistentRDDs().size()
+
+    # ids, not a count: the ContextCleaner may unpersist earlier tests'
+    # RDDs while this test runs
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    persisted_before = persisted()
     cells = similarity.ivf_centroids(c)
     assert isinstance(cells, list) and list(cells) == cells
 
@@ -432,11 +438,14 @@ def test_ivf_topk_reuses_inverted_lists_of_its_own_corpus(spark):
         similarity.ivf_topk(q, other, k=5, cents=list(cells))
     )
 
-    assert jsc.getPersistentRDDs().size() > persisted_before
+    added = persisted() - persisted_before
+    assert added
     cells.release()
-    assert jsc.getPersistentRDDs().size() == persisted_before
+    assert not added & persisted()
     cells.release()  # idempotent
     # released cells rebuild their lists on the next lookup
     assert rows(similarity.ivf_topk(q, c, k=5, cents=cells)) == want
+    rebuilt = persisted() - persisted_before
+    assert rebuilt
     cells.release()
-    assert jsc.getPersistentRDDs().size() == persisted_before
+    assert not (added | rebuilt) & persisted()

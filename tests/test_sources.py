@@ -515,11 +515,27 @@ def test_reads_run_no_spark_job(spark, tmp_path):
     # The schema comes from one footer read on the driver, so building a
     # table or snapshot read runs no schema-inference job.
     p = str(tmp_path / "nojob")
-    lake.write_snapshot(spark, spark.range(4), p)
-    lake.write_snapshot(spark, spark.range(4, 8), p)
-    assert _jobs_run_by(spark, lambda: read_table(spark, SF, "events")) == 0
-    assert _jobs_run_by(spark, lambda: lake.read_snapshot(spark, p)) == 0
-    assert _jobs_run_by(spark, lambda: lake.read_snapshot_mor(spark, p)) == 0
+    lake.write_snapshot(spark, spark.range(4), p, stats_cols=["id"])
+    lake.write_snapshot(spark, spark.range(4, 8), p, stats_cols=["id"])
+    lake.stage_branch(spark, spark.range(8, 10), p, "audit")
+    reads = {
+        "read_table": lambda: read_table(spark, SF, "events"),
+        "read_snapshot": lambda: lake.read_snapshot(spark, p),
+        "read_snapshot_mor": lambda: lake.read_snapshot_mor(spark, p),
+        "read_snapshot_pruned": lambda: lake.read_snapshot_pruned(
+            spark, p, "id", 5, 6
+        ),
+        "read_snapshot_pruned (no file kept)": lambda: lake.read_snapshot_pruned(
+            spark, p, "id", 50, 60
+        ),
+        "read_snapshot_spec_pruned": lambda: lake.read_snapshot_spec_pruned(
+            spark, p, "id", 5
+        ),
+        "read_incremental": lambda: lake.read_incremental(spark, p, 1, 2),
+        "read_branch": lambda: lake.read_branch(spark, p, "audit"),
+    }
+    for name, read in reads.items():
+        assert _jobs_run_by(spark, read) == 0, name
     # the job counter does see inference where it still runs
     files = lake._read_manifest(spark, p, 2)
     assert _jobs_run_by(spark, lambda: spark.read.parquet(*files)) >= 1
@@ -590,6 +606,38 @@ def test_evolved_lake_default_read_keeps_first_schema(spark, tmp_path):
         assert lake.read_snapshot(spark, p).columns == ["id", "v"]
     finally:
         spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_lake_reads_keep_inferred_schema_across_spec_and_branch(spark, tmp_path):
+    # v1 unpartitioned with two columns, v2 adds a column under a
+    # partition spec, a branch stages on top: every manifest-driven read
+    # gives the schema and rows that inference over the same files gives.
+    p = str(tmp_path / "spec")
+    rows = spark.range(12).selectExpr("id", "CAST(id % 3 AS STRING) AS k")
+    lake.write_snapshot(spark, rows.where("id < 6"), p, stats_cols=["id"])
+    lake.write_snapshot(
+        spark, rows.where("id >= 6").selectExpr("*", "id * 2 AS v"), p,
+        stats_cols=["id"], partition_by=["k"],
+    )
+    staged_rows = rows.where("id < 2").selectExpr("id + 100 AS id", "k")
+    lake.stage_branch(spark, staged_rows, p, "b")
+    v1, v2 = lake._read_manifest(spark, p, 1), lake._read_manifest(spark, p, 2)
+    staged = lake._read_branch_doc(spark, p, "b")["files"]
+    delta = [f for f in v2 if f not in v1]
+    cases = [
+        (lake.read_snapshot_pruned(spark, p, "id", 0, 20)[0], v2),
+        (lake.read_snapshot_spec_pruned(spark, p, "id", 3)[0], v1),
+        (lake.read_incremental(spark, p, 1, 2), delta),
+        (lake.read_branch(spark, p, "b"), v2 + staged),
+    ]
+    for df, files in cases:
+        inferred = spark.read.parquet(*files)
+        assert df.schema == inferred.schema
+    got = lake.read_incremental(spark, p, 1, 2)
+    assert got.columns == ["id", "k", "v"]
+    assert sorted(r.id for r in got.collect()) == list(range(6, 12))
+    branch = lake.read_branch(spark, p, "b")
+    assert sorted(r.id for r in branch.collect()) == [*range(12), 100, 101]
 
 
 def test_ever_checkpoint_boundary(spark, tmp_path):
